@@ -18,4 +18,8 @@ Re-expresses the capability surface of the reference Go+ClickHouse system
   unbounded integer cursor.
 """
 
+from . import _zipimport
+
+_zipimport.install()
+
 __version__ = "0.1.0"

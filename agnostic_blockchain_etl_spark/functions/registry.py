@@ -11,9 +11,17 @@ Design notes (scale): the pure kernels (hex, keccak) are registered as
 rather than pickled rows; the decode UDFs are pandas UDFs too (CPU-bound,
 benefit from batch amortization). The RPC functions are pandas UDFs as
 well: one transport is resolved per Arrow batch, so SQL-verbatim
-pipelines get connection/retry-state reuse too; high-fan-out pipelines
-should still prefer the ``mapInPandas`` source in
-``operators/rpc_source.py`` (transport pooled per worker, request
+pipelines get connection/retry-state reuse too. They are registered
+**nondeterministic**: a deterministic UDF is a pure function to the
+optimizer, which may evaluate it more than once per row. In
+``logs_ingest`` the ``size(receipts) > 0`` filter Spark infers from
+``explode(receipts)`` is pushed below the projection and clones the
+``eth_getBlockReceipts`` call into a second Python evaluation branch,
+so a block's receipts were fetched twice. Marked nondeterministic, each
+call site runs once per input row (``tests/test_rpc_call_counts.py``
+pins the count for every ``examples/*_ingest`` pipeline).
+High-fan-out pipelines should still prefer the ``mapInPandas`` source
+in ``operators/rpc_source.py`` (transport pooled per worker, request
 batching). Where possible prefer the *native column expressions* in
 ``native`` below (hex encode/decode compile to JVM ``unhex``/``hex``
 and stay inside whole-stage codegen — no Python at all).
@@ -200,8 +208,10 @@ def register_all(spark: SparkSession) -> None:
     spark.udf.register("keccak256", _udf_keccak256)
     spark.udf.register("evm_decode_event", _udf_decode_event)
     spark.udf.register("evm_decode_call", _udf_decode_call)
-    spark.udf.register("ethereum_rpc", _udf_ethereum_rpc)
-    spark.udf.register("ethereum_rpc_call", _udf_ethereum_rpc_call)
+    # an external call is not a pure function (module docstring)
+    spark.udf.register("ethereum_rpc", _udf_ethereum_rpc.asNondeterministic())
+    spark.udf.register("ethereum_rpc_call",
+                       _udf_ethereum_rpc_call.asNondeterministic())
     from .words import register_words
     register_words(spark)
     register_json_helpers(spark)

@@ -57,6 +57,7 @@ QUERIES, ORACLES, query = make_registry()
 BITS_PER_WORD = 60          # sign-safe word width (see module docstring)
 _DEFAULT_M_WORDS = 256      # 15_360 bits — gate-sized; knob up at scale
 _DEFAULT_K = 5
+_KM_MAX_K = 7               # km overflow bound (see _positions)
 
 
 def bloom_content_key(text_col: str = "text",
@@ -106,6 +107,9 @@ def _positions(key: Column, m_words: int, k: int, salt: str,
     `bloom_filter_array` only catches geometry, not scheme, drift)."""
     m_bits = m_words * BITS_PER_WORD
     if scheme == "km":
+        if k > _KM_MAX_K:
+            raise ValueError(f"scheme 'km' needs k <= {_KM_MAX_K} to keep "
+                             f"h1 + (k-1)*h2 below 2^63, got k={k}")
         h1 = _keyed_h60(f"{salt}a:", key)
         h2 = _keyed_h60(f"{salt}b:", key)
         return [(h1 + F.lit(i).cast("long") * h2) % m_bits

@@ -1,8 +1,10 @@
 -- per-batch buffer: RPC fan-out over the block range, JSON → typed columns
 -- (reference: examples/ethereum_blocks/create_buffer.sql:1-72 —
 -- generate_series → ethereum_rpc → JSONExtract(Tuple) → evm_hex_decode*).
--- A temp view is the Spark buffer: lazy, consumed exactly once by
--- write_to_sink.sql, so the RPC stage executes once, distributed.
+-- A temp view is the Spark buffer: lazy, so the RPC fan-out runs inside
+-- write_to_sink.sql, distributed. ethereum_rpc is registered
+-- nondeterministic, so the optimizer cannot duplicate the call: one call
+-- per block.
 CREATE OR REPLACE TEMPORARY VIEW buffer_{{.START}}_{{.END}} AS
 WITH raw AS (
     SELECT from_json(

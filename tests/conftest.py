@@ -4,14 +4,24 @@ AGN_RPC_MOCK must be in the environment BEFORE the first SparkSession
 starts: Spark's Python worker daemon forks with the environment it was
 launched with, so setting the variable in a later test module is too late
 for the already-running workers. One session-wide default here keeps test
-ordering irrelevant."""
+ordering irrelevant. The same holds for the mock chain's call log
+directory."""
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("AGN_RPC_MOCK", "tests.mock_chain:transport")
+
+# the mock chain logs every call here, from every worker process, so tests
+# can count the calls a pipeline makes (tests/test_rpc_call_counts.py)
+if "MOCK_CHAIN_CALL_LOG" not in os.environ:
+    os.environ["MOCK_CHAIN_CALL_LOG"] = tempfile.mkdtemp(prefix="mock-chain-calls-")
+    atexit.register(shutil.rmtree, os.environ["MOCK_CHAIN_CALL_LOG"], True)
 
 
 def pytest_collection_modifyitems(config, items):

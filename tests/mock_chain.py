@@ -15,6 +15,7 @@ World model:
 from __future__ import annotations
 
 import json
+import os
 
 from agnostic_blockchain_etl_spark.functions.hex import (evm_hex_decode,
                                                          evm_hex_decode_int,
@@ -27,6 +28,8 @@ CHAIN_TIP = 149
 # FINALIZED_LAG of the tip are not yet finalized
 FINALIZED_LAG = 6
 GENESIS_TS = 1600000000
+# directory the transport logs every call to, when set (tests/conftest.py)
+CALL_LOG_ENV = "MOCK_CHAIN_CALL_LOG"
 
 TRANSFER_TOPIC0 = keccak256("Transfer(address,address,uint256)")
 TOKEN = keccak256(b"token:MCK")[:20]
@@ -203,5 +206,35 @@ def serve(method: str, params: list):
     raise RuntimeError(f"mock chain: unsupported method {method}")
 
 
+class LoggedTransport(MockTransport):
+    """Serves the mock chain and appends one ``url<TAB>method<TAB>params``
+    line per call to ``<log_dir>/<pid>.log``, so a test can count the calls
+    every Spark worker process made."""
+
+    def __init__(self, log_dir: str):
+        super().__init__(serve)
+        self.log_dir = log_dir
+
+    def call(self, url: str, method: str, params: list):
+        path = os.path.join(self.log_dir, f"{os.getpid()}.log")
+        with open(path, "a") as f:
+            f.write(f"{url}\t{method}\t{json.dumps(params)}\n")
+        return super().call(url, method, params)
+
+
+def logged_calls(url: str) -> list[tuple[str, list]]:
+    """``(method, params)`` of every logged call made to ``url``."""
+    log_dir = os.environ[CALL_LOG_ENV]
+    out = []
+    for name in os.listdir(log_dir):
+        with open(os.path.join(log_dir, name)) as f:
+            for line in f:
+                u, method, params = line.rstrip("\n").split("\t")
+                if u == url:
+                    out.append((method, json.loads(params)))
+    return out
+
+
 def transport() -> MockTransport:
-    return MockTransport(serve)
+    log_dir = os.environ.get(CALL_LOG_ENV)
+    return LoggedTransport(log_dir) if log_dir else MockTransport(serve)

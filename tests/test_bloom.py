@@ -367,3 +367,14 @@ class TestKirschMitzenmacher:
     def test_unknown_scheme_rejected(self, spark, docs):
         with pytest.raises(ValueError, match="scheme"):
             bloom_build(docs, m_words=_M, k=_K, scheme="fnv")
+
+    def test_k_above_overflow_bound_rejected(self, spark, docs):
+        """h1 + (k-1)*h2 stays below 2^63 only for k <= 7; a larger k
+        would wrap to negative positions (probe misses, false
+        negatives), so both build and probe refuse it."""
+        bloom_build(docs, m_words=_M, k=7, scheme="km")
+        with pytest.raises(ValueError, match="k <= 7"):
+            bloom_build(docs, m_words=_M, k=8, scheme="km")
+        with pytest.raises(ValueError, match="k <= 7"):
+            bloom_probe(docs, [0] * _M, m_words=_M, k=9, scheme="km")
+        bloom_build(docs, m_words=_M, k=9)      # salted has no such bound

@@ -408,10 +408,29 @@ class TestCheckpointRelease:
         got = {r["doc_id"]: r["label"]
                for r in connected_components(
                    pairs, local_finish_edges=0).collect()}
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        blocks = sum(1 for i in infos if i.memSize() > 0
-                     or i.diskSize() > 0)
-        return got, blocks
+        return got, self._settled_block_count(spark)
+
+    @staticmethod
+    def _settled_block_count(spark):
+        """RDDs holding blocks, read once the count stops changing: the
+        release unpersists without blocking, so the block managers may
+        still be dropping blocks when the job returns."""
+        import time
+
+        def count():
+            infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            return sum(1 for i in infos if i.memSize() > 0
+                       or i.diskSize() > 0)
+
+        deadline = time.monotonic() + 10
+        last = count()
+        while time.monotonic() < deadline:
+            time.sleep(0.2)
+            now = count()
+            if now == last:
+                break
+            last = now
+        return last
 
     def test_release_frees_edge_blocks_and_preserves_labels(
             self, spark, monkeypatch):
