@@ -11,7 +11,7 @@ Design notes (scale): the pure kernels (hex, keccak) are registered as
 rather than pickled rows; the decode UDFs are pandas UDFs too (CPU-bound,
 benefit from batch amortization). The RPC functions are pandas UDFs as
 well: one transport is resolved per Arrow batch, so SQL-verbatim
-pipelines get connection/retry-state reuse too. They are registered
+pipelines get connection/retry-state reuse. They are registered
 **nondeterministic**: a deterministic UDF is a pure function to the
 optimizer, which may evaluate it more than once per row. In
 ``logs_ingest`` the ``size(receipts) > 0`` filter Spark infers from
@@ -19,12 +19,12 @@ optimizer, which may evaluate it more than once per row. In
 ``eth_getBlockReceipts`` call into a second Python evaluation branch,
 so a block's receipts were fetched twice. Marked nondeterministic, each
 call site runs once per input row (``tests/test_rpc_call_counts.py``
-pins the count for every ``examples/*_ingest`` pipeline).
-High-fan-out pipelines should still prefer the ``mapInPandas`` source
-in ``operators/rpc_source.py`` (transport pooled per worker, request
-batching). Where possible prefer the *native column expressions* in
-``native`` below (hex encode/decode compile to JVM ``unhex``/``hex``
-and stay inside whole-stage codegen — no Python at all).
+pins the count for every ``examples/*_ingest`` pipeline). These two
+UDFs are the engine's only RPC ingestion path: every template, per-row
+``eth_call`` and multi-call-per-block buffer goes through them.
+Where possible prefer the *native column expressions* in ``native``
+below (hex encode/decode compile to JVM ``unhex``/``hex`` and stay
+inside whole-stage codegen — no Python at all).
 """
 
 from __future__ import annotations
@@ -215,57 +215,7 @@ def register_all(spark: SparkSession) -> None:
     from .words import register_words
     register_words(spark)
     register_json_helpers(spark)
-    # custom data sources: SQL `USING agn_rpc` / `USING agn_cursor` views
-    # work in pipeline templates once registered (Connect sessions lack
-    # spark.dataSource — degrade to UDF-form there)
-    try:
-        from ..sources.rpc_datasource import RpcDataSource
-        from ..streaming.cursor_datasource import CursorDataSource
-        spark.dataSource.register(RpcDataSource)
-        spark.dataSource.register(CursorDataSource)
-    except Exception:  # noqa: BLE001 — registration is best-effort
-        pass
-    _register_rpc_udtf(spark)
     spark._agn_udfs_registered = True
-
-
-def _register_rpc_udtf(spark: SparkSession) -> None:
-    """Register ``ethereum_rpc_range`` as a Python UDTF so SQL can use
-    the reference's table-function shape VERBATIM:
-
-        SELECT * FROM ethereum_rpc_range(0, 99,
-            'eth_getBlockByNumber', '["{n_hex}", false]', 'https://...')
-
-    (reference: `FROM ethereum_rpc(...)` scans in every ingest buffer,
-    examples/ethereum_blocks/create_buffer.sql:38-73). A scalar-args
-    UDTF call evaluates on one task — the distributed forms are the
-    `agn_rpc` data source (partition-planned) and the mapInPandas stage
-    (`operators/rpc_source.py`); this form exists for verbatim-SQL
-    parity and bounded lookups."""
-    import json as _json
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="n BIGINT, response STRING")
-    class EthereumRpcRange:
-        def eval(self, start: int, end: int, method: str,
-                 params_template: str, endpoint: str):
-            from . import rpc as rpcmod
-            transport = rpcmod.get_default_transport()
-            for n in range(int(start), int(end) + 1):
-                tmpl = (params_template or "[]") \
-                    .replace("{n_hex}", hex(n)).replace("{n}", str(n))
-                try:
-                    params = _json.loads(tmpl)
-                except ValueError:
-                    params = []
-                yield n, rpcmod.ethereum_rpc(method, params, endpoint,
-                                             transport=transport)
-
-    try:
-        spark.udtf.register("ethereum_rpc_range", EthereumRpcRange)
-    except Exception:  # noqa: BLE001 — best-effort (older/Connect sessions)
-        pass
 
 
 def register_json_helpers(spark: SparkSession,

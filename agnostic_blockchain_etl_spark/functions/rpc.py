@@ -13,17 +13,16 @@ paths): every call returns a JSON string ``{"value": <result>, "error":
 embedding the error; ``fail-on-null`` raises when the RPC result is null.
 
 Transports:
-- ``HttpTransport`` — stdlib urllib POST with basic retry/backoff (no
-  third-party deps; batches multiple requests per POST where the server
-  allows JSON-RPC batch arrays).
+- ``HttpTransport`` — stdlib urllib, one JSON-RPC request per POST (no
+  third-party deps). Retry/backoff lives in ``ethereum_rpc``, driven by
+  the endpoint fragment options.
 - ``MockTransport`` — canned (method, params) → response corpus for tests
   (FIXTURES.md §8); also accepts a callable.
 
-Inside Spark these kernels run either as the registered row-level UDFs
-(SQL-name parity) or — for high fan-out — via the ``mapInPandas`` stage in
-``operators/rpc_source.py``, where each Python worker keeps one transport
-with a reusable connection: the Spark analog of the reference's
-conn-per-batch + Workers parallelism (internal/pipeline/batcher.go:64,
+Inside Spark these kernels run only as the registered pandas UDFs
+(``functions/registry.py``), which resolve one transport per Arrow batch.
+Parallelism is the buffer's input partitions × the pipeline's Workers,
+the same two knobs the reference tunes (internal/pipeline/batcher.go:64,
 examples/ethereum_transactions/pipeline.yaml:26).
 """
 

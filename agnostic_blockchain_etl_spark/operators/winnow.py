@@ -52,8 +52,8 @@ _SALT = "winnow:"
 # y < 2^30, B < 2^30 → y·B < 2^60).
 _M30 = 1 << 30                  # half-width split of the 60-bit word hash
 _PP = 1073741789                # largest prime below 2^30
-_PA = 1000003                   # hi-half Horner multiplier
-_PB = 998244353                 # lo-half Horner multiplier (≠ _PA family)
+_PA = 1000003                   # lo-half Horner multiplier
+_PB = 998244353                 # hi-half Horner multiplier (≠ _PA family)
 _SALT2 = "winnow2:"
 
 
@@ -86,7 +86,8 @@ def _selected(docs: DataFrame, k: int, w: int, text_col: str,
     arithmetic both engines evaluate bit-identically: split each
     60-bit word hash into 30-bit halves, Horner-fold each half across
     the gram (multipliers `_PA`/`_PB` mod prime `_PP`), and pack
-    ``hi·2^30 + lo``. No k-gram string is ever built (v1 concats and
+    ``lo·2^30 + hi`` (the low-half fold lands in the high bits). No
+    k-gram string is ever built (v1 concats and
     md5s a ~k-word string PER POSITION); each word's md5 runs exactly
     once per its row (shorter input, no concat churn). Pair collision
     odds stay ~2^-60-ish for distinct grams. DIFFERENT fingerprint
@@ -121,14 +122,14 @@ def _selected(docs: DataFrame, k: int, w: int, text_col: str,
                               for j in range(1, k)]
         gram = flat_h.select("doc_id", "pos", *[
             h.alias(f"_h{j}") for j, h in enumerate(hs)])
-        hi = F.col("_h0") % _M30
-        lo = F.shiftright(F.col("_h0"), 30)
+        lo = F.col("_h0") % _M30
+        hi = F.shiftright(F.col("_h0"), 30)
         for j in range(1, k):
-            hi = (hi * _PA + F.col(f"_h{j}") % _M30) % _PP
-            lo = (lo * _PB + F.shiftright(F.col(f"_h{j}"), 30)) % _PP
+            lo = (lo * _PA + F.col(f"_h{j}") % _M30) % _PP
+            hi = (hi * _PB + F.shiftright(F.col(f"_h{j}"), 30)) % _PP
         flat = (gram.where(F.col(f"_h{k - 1}").isNotNull())
                 .select("doc_id", "pos",
-                        (hi * _M30 + lo).alias("h")))
+                        (lo * _M30 + hi).alias("h")))
     else:
         kgs = F.when(
             F.size(words) >= k,
@@ -262,11 +263,11 @@ def _sql_winnow_pairs_v2() -> str:
     halves Horner-folded with the same constants and the same
     left-to-right reduction order as the Spark zip_with chain."""
     h = sql_keyed_h60(f"'{_SALT2}'", "t")
-    hi = f"(hs[i+1] % {_M30})"
-    lo = f"(hs[i+1] >> 30)"
+    lo = f"(hs[i+1] % {_M30})"
+    hi = f"(hs[i+1] >> 30)"
     for j in range(1, _K):
-        hi = f"(({hi} * {_PA} + (hs[i+{j + 1}] % {_M30})) % {_PP})"
-        lo = f"(({lo} * {_PB} + (hs[i+{j + 1}] >> 30)) % {_PP})"
+        lo = f"(({lo} * {_PA} + (hs[i+{j + 1}] % {_M30})) % {_PP})"
+        hi = f"(({hi} * {_PB} + (hs[i+{j + 1}] >> 30)) % {_PP})"
     return f"""
     WITH toks AS (SELECT doc_id,
                          string_split_regex(lower(trim(text)), '\\s+')
@@ -279,8 +280,8 @@ def _sql_winnow_pairs_v2() -> str:
                   CASE WHEN n >= {_K} THEN
                     list_transform(generate_series(0, n - {_K}),
                       i -> {{'pos': i,
-                             'h': {hi} * CAST({_M30} AS BIGINT)
-                                  + {lo}}})
+                             'h': {lo} * CAST({_M30} AS BIGINT)
+                                  + {hi}}})
                   ELSE [] END AS kgs
            FROM wh),
     flat AS (SELECT doc_id, unnest(kgs) AS s FROM kg),

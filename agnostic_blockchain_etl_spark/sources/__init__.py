@@ -3,7 +3,6 @@ Replacing semantics, proxy (JDBC) tables, refreshable dictionaries."""
 
 from .dictionary import RefreshableDictionary
 from .replacing import compact_replacing, read_replacing
-from .rpc_datasource import RpcDataSource
 
 __all__ = ["compact_replacing", "read_replacing",
-           "RefreshableDictionary", "RpcDataSource"]
+           "RefreshableDictionary"]

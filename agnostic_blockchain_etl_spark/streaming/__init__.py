@@ -3,15 +3,11 @@ micro-batching over an unbounded integer domain (SURVEY.md §2.8) — no
 event-time windows, watermarks, or late data anywhere in its workload.
 
 The pipeline runner in ``plans/pipeline.py`` IS that streaming model
-(tip-poll → bounded ranges → ordered commit). This package is the
-Structured-Streaming-facing surface on top of it:
+(tip-poll → bounded ranges → ordered commit), and the only one: block
+ranges come from its batcher and rows from the ``ethereum_rpc`` SQL
+UDF. This package holds the Structured Streaming operators that run
+beside it:
 
-- ``cursor_datasource.CursorDataSource`` — the cursor/tip model as a
-  REAL ``readStream`` source (Spark 4 Python Data Source API):
-  ``format("agn_cursor")`` emits tip-bounded ranges with Spark's
-  checkpoint as the cursor store.
-- ``cursor_source.cursor_stream_batches`` — the same loop as a plain
-  generator for driver-side orchestration.
 - ``windows.py`` — watermarked event-time windows + native
   ``session_window`` sessionization (stream-equals-batch verified).
 - ``stateful.py`` — custom stateful operators via
@@ -22,16 +18,13 @@ Structured-Streaming-facing surface on top of it:
   batch_id snapshot rule → exactly-once under replay).
 """
 
-from .cursor_datasource import CursorDataSource
-from .cursor_source import cursor_stream_batches
 from .dedup import (bloom_dedup_stream, bm25_stats_stream, dedup_stream,
                     dedup_stream_bounded,
                     incremental_neardup_stream, last_committed_batch,
                     paragraph_dedup_stream, prune_store_deltas,
                     semantic_dedup_stream, source_cap_stream)
 
-__all__ = ["CursorDataSource", "cursor_stream_batches",
-           "bloom_dedup_stream", "bm25_stats_stream", "dedup_stream",
+__all__ = ["bloom_dedup_stream", "bm25_stats_stream", "dedup_stream",
            "dedup_stream_bounded", "incremental_neardup_stream",
            "last_committed_batch", "paragraph_dedup_stream",
            "prune_store_deltas", "semantic_dedup_stream",

@@ -4,6 +4,7 @@ import json
 
 import pytest
 from hypothesis import given, strategies as st
+from pyspark.errors import PythonException
 
 from agnostic_blockchain_etl_spark.functions import (
     abi, hex as hexmod, keccak, rpc)
@@ -217,6 +218,49 @@ class TestRpc:
         rpc.ethereum_rpc_call("0x" + "cc" * 20, "function decimals()(uint8)",
                               "", -1, "http://x", transport=rpc.MockTransport(serve))
         assert seen["block"] == "latest"
+
+    # The envelope and fail-on-* contract through the registered SQL UDF,
+    # the engine's one RPC path, against the session mock chain.
+    # max-retries=0: a failing call returns at once instead of backing off.
+
+    @pytest.fixture(scope="class")
+    def spark(self):
+        from agnostic_blockchain_etl_spark.session import get_session
+        return get_session(master="local[4]",
+                           conf={"spark.sql.shuffle.partitions": "4"})
+
+    @staticmethod
+    def _rpc_sql(method, params, options):
+        return (f"SELECT ethereum_rpc('{method}', array({params}), "
+                f"'mock://chain#max-retries=0{options}') AS r FROM range(3)")
+
+    def test_sql_error_envelope_rows(self, spark):
+        rows = spark.sql(self._rpc_sql("bogus_method", "", "")).collect()
+        envs = [json.loads(r.r) for r in rows]
+        assert len(envs) == 3
+        assert all(e["value"] is None and "bogus_method" in e["error"]
+                   for e in envs)
+
+    def test_sql_fail_on_error_fails_query(self, spark):
+        q = spark.sql(self._rpc_sql("bogus_method", "", "&fail-on-error=true"))
+        with pytest.raises(PythonException) as info:
+            q.collect()
+        assert "RpcError" in str(info.value)
+
+    def test_sql_null_result_past_tip(self, spark):
+        from tests.mock_chain import CHAIN_TIP
+        n = 10000
+        assert n > CHAIN_TIP
+        params = f"'{hex(n)}', 'false'"
+        rows = spark.sql(
+            self._rpc_sql("eth_getBlockByNumber", params, "")).collect()
+        assert [json.loads(r.r) for r in rows] == \
+            [{"value": None, "error": None}] * 3
+        q = spark.sql(self._rpc_sql("eth_getBlockByNumber", params,
+                                    "&fail-on-null=true"))
+        with pytest.raises(PythonException) as info:
+            q.collect()
+        assert "RpcError" in str(info.value)
 
 
 class TestDecoderFuzz:

@@ -1,6 +1,6 @@
 """Structured Streaming tests: file-source micro-batches through a
 watermarked windowed aggregation, checked against the identical batch
-plan (the unified batch/stream model), plus cursor-stream properties."""
+plan (the unified batch/stream model), and exactly-once restarts."""
 
 import os
 import sys
@@ -10,8 +10,6 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from agnostic_blockchain_etl_spark.streaming.cursor_source import (
-    cursor_stream_batches)
 from agnostic_blockchain_etl_spark.streaming.windows import windowed_counts
 
 
@@ -58,24 +56,6 @@ class TestWindowedStream:
         assert got.count() == expected.count() > 0
         assert (got.exceptAll(expected).count() == 0
                 and expected.exceptAll(got).count() == 0)
-
-
-class TestCursorStream:
-    def test_bounded_drain(self):
-        tips = iter([10, 10, 25])
-        batches = list(cursor_stream_batches(
-            lambda: next(tips, None), start=0, max_batch_size=8,
-            poll_interval_s=0, stop_when_caught_up=True))
-        covered = [c for b in batches for c in range(b.start, b.end + 1)]
-        assert covered == list(range(0, 26))
-        assert all(b.items <= 8 for b in batches)
-        assert [b.number for b in batches] == list(range(len(batches)))
-
-    def test_stop_after(self):
-        batches = list(cursor_stream_batches(
-            lambda: 1000, start=0, max_batch_size=10,
-            poll_interval_s=0, stop_after_batches=3))
-        assert len(batches) == 3 and batches[-1].end == 29
 
 
 class TestCheckpointRestart:

@@ -321,11 +321,11 @@ class TestPolyScheme:
         hs = [h60(t) for t in words]
         expected_fps = []
         for i in range(len(words) - K + 1):
-            hi, lo = hs[i] % _M30, hs[i] >> 30
+            lo, hi = hs[i] % _M30, hs[i] >> 30
             for j in range(1, K):
-                hi = (hi * _PA + hs[i + j] % _M30) % _PP
-                lo = (lo * _PB + (hs[i + j] >> 30)) % _PP
-            expected_fps.append(hi * _M30 + lo)
+                lo = (lo * _PA + hs[i + j] % _M30) % _PP
+                hi = (hi * _PB + (hs[i + j] >> 30)) % _PP
+            expected_fps.append(lo * _M30 + hi)
         # w=1 window selects EVERY k-gram position's own hash
         got = winnow_fingerprints(_docs(spark, [(1, " ".join(words))]),
                                   w=1, scheme="poly").collect()
