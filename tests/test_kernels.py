@@ -219,8 +219,9 @@ class TestRpc:
                               "", -1, "http://x", transport=rpc.MockTransport(serve))
         assert seen["block"] == "latest"
 
-    # The envelope and fail-on-* contract through the registered SQL UDF,
-    # the engine's one RPC path, against the session mock chain.
+    # The fail-on-* contract through the registered SQL UDF, the engine's
+    # one RPC path, against the session mock chain (the error envelope
+    # itself: tests/test_rpc_datasource.py, tests/test_rpc_source.py).
     # max-retries=0: a failing call returns at once instead of backing off.
 
     @pytest.fixture(scope="class")
@@ -233,13 +234,6 @@ class TestRpc:
     def _rpc_sql(method, params, options):
         return (f"SELECT ethereum_rpc('{method}', array({params}), "
                 f"'mock://chain#max-retries=0{options}') AS r FROM range(3)")
-
-    def test_sql_error_envelope_rows(self, spark):
-        rows = spark.sql(self._rpc_sql("bogus_method", "", "")).collect()
-        envs = [json.loads(r.r) for r in rows]
-        assert len(envs) == 3
-        assert all(e["value"] is None and "bogus_method" in e["error"]
-                   for e in envs)
 
     def test_sql_fail_on_error_fails_query(self, spark):
         q = spark.sql(self._rpc_sql("bogus_method", "", "&fail-on-error=true"))

@@ -402,25 +402,30 @@ class TestCheckpointRelease:
     def _run_cc(self, spark, edges):
         from agnostic_blockchain_etl_spark.operators import (
             connected_components)
+        # RDD ids only grow: anything numbered above this one was made by
+        # this run, so blocks that earlier tests leave behind (and that
+        # the context cleaner may drop at any moment) are not counted
+        first_id = spark.sparkContext.emptyRDD().id()
         pairs = spark.createDataFrame(
             [(int(a), int(b)) for a, b in edges],
             "doc_a long, doc_b long")
         got = {r["doc_id"]: r["label"]
                for r in connected_components(
                    pairs, local_finish_edges=0).collect()}
-        return got, self._settled_block_count(spark)
+        return got, self._settled_block_count(spark, first_id)
 
     @staticmethod
-    def _settled_block_count(spark):
-        """RDDs holding blocks, read once the count stops changing: the
-        release unpersists without blocking, so the block managers may
-        still be dropping blocks when the job returns."""
+    def _settled_block_count(spark, first_id):
+        """RDDs numbered above ``first_id`` holding blocks, read once the
+        count stops changing: the release unpersists without blocking, so
+        the block managers may still be dropping blocks when the job
+        returns."""
         import time
 
         def count():
             infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            return sum(1 for i in infos if i.memSize() > 0
-                       or i.diskSize() > 0)
+            return sum(1 for i in infos if i.id() > first_id
+                       and (i.memSize() > 0 or i.diskSize() > 0))
 
         deadline = time.monotonic() + 10
         last = count()

@@ -1,102 +1,25 @@
-"""agn_rpc batch source: partition-planned distributed fan-out against
-the mock chain, error envelopes as rows, partition count = range/batch."""
-
-from __future__ import annotations
+"""Error envelope of a block-range RPC scan, written in SQL against the
+registered ``ethereum_rpc`` UDF (the engine's one RPC ingestion path) and
+the session mock chain. ``#max-retries=0``: a failing call returns at once
+instead of backing off."""
 
 import json
-import os
-import sys
 
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from agnostic_blockchain_etl_spark.sources.rpc_datasource import (  # noqa: E402
-    RpcDataSource)
 
 
 @pytest.fixture(scope="module")
 def spark():
-    os.environ["AGN_RPC_MOCK"] = "tests.mock_chain:transport"
     from agnostic_blockchain_etl_spark.session import get_session
-    s = get_session(master="local[8]",
-                    conf={"spark.sql.shuffle.partitions": "8"})
-    s.dataSource.register(RpcDataSource)
-    yield s
-
-
-def _scan(spark, **opts):
-    r = (spark.read.format("agn_rpc")
-         .option("endpoint", "mock://chain")
-         .option("method", "eth_getBlockByNumber")
-         .option("params_template", '["{n_hex}", false]'))
-    for k, v in opts.items():
-        r = r.option(k, v)
-    return r.load()
-
-
-def test_block_range_scan(spark):
-    from tests import mock_chain as mc
-    df = _scan(spark, start=0, end=49, batch_size=10)
-    assert df.rdd.getNumPartitions() == 5        # ceil(50/10) tasks
-    rows = {r["n"]: json.loads(r["response"]) for r in df.collect()}
-    assert sorted(rows) == list(range(50))
-    for n in (0, 17, 49):
-        assert rows[n]["error"] is None
-        assert rows[n]["value"]["hash"] == "0x" + mc.block_hash(n).hex()
+    return get_session(master="local[4]",
+                       conf={"spark.sql.shuffle.partitions": "4"})
 
 
 def test_error_envelope_rows(spark):
-    df = (spark.read.format("agn_rpc")
-          .option("endpoint", "mock://chain")
-          .option("method", "bogus_method")
-          .option("start", 0).option("end", 2).load())
-    rows = [json.loads(r["response"]) for r in df.collect()]
-    assert len(rows) == 3
-    assert all(r["value"] is None and "bogus_method" in r["error"]
-               for r in rows)
-
-
-def test_filter_pushdown_not_needed_for_projection(spark):
-    # the source feeds ordinary Catalyst plans: downstream projection and
-    # filters compose (no collect loops anywhere)
-    from pyspark.sql import functions as F
-    df = _scan(spark, start=0, end=19, batch_size=5)
-    out = (df.where(F.col("n") % 2 == 0)
-           .select("n", F.get_json_object("response", "$.value.number")
-                   .alias("num_hex")))
-    got = {r["n"]: r["num_hex"] for r in out.collect()}
-    assert sorted(got) == list(range(0, 20, 2))
-    assert got[4] == hex(4)
-
-
-def test_sql_using_view_form(spark):
-    """SQL-verbatim form: a pipeline template can declare the RPC scan as
-    a `USING agn_rpc` view — the closest Spark-SQL analog of the
-    reference's `FROM ethereum_rpc(...)` table function (the source is
-    registered by register_all, so templates need no Python setup)."""
-    from tests import mock_chain as mc
-    spark.sql("""
-        CREATE OR REPLACE TEMPORARY VIEW rpc_blocks_sql
-        USING agn_rpc
-        OPTIONS (endpoint 'mock://chain', method 'eth_getBlockByNumber',
-                 start '3', `end` '7', batch_size '2',
-                 params_template '["{n_hex}", false]')""")
-    rows = {r["n"]: r["h"] for r in spark.sql(
-        "SELECT n, get_json_object(response, '$.value.hash') AS h "
-        "FROM rpc_blocks_sql").collect()}
-    assert sorted(rows) == [3, 4, 5, 6, 7]
-    assert rows[5] == "0x" + mc.block_hash(5).hex()
-
-
-def test_udtf_table_function_form(spark):
-    """The reference's exact table-function syntax: SELECT ... FROM
-    ethereum_rpc_range(start, end, method, params_template, endpoint)."""
-    from tests import mock_chain as mc
-    rows = {r["n"]: r["h"] for r in spark.sql("""
-        SELECT n, get_json_object(response, '$.value.hash') AS h
-        FROM ethereum_rpc_range(10, 14, 'eth_getBlockByNumber',
-                                '["{n_hex}", false]', 'mock://chain')
-    """).collect()}
-    assert sorted(rows) == [10, 11, 12, 13, 14]
-    assert rows[12] == "0x" + mc.block_hash(12).hex()
+    rows = spark.sql(
+        "SELECT ethereum_rpc('bogus_method', array(), "
+        "'mock://chain#max-retries=0') AS response FROM range(3)").collect()
+    envs = [json.loads(r["response"]) for r in rows]
+    assert len(envs) == 3
+    assert all(e["value"] is None and "bogus_method" in e["error"]
+               for e in envs)

@@ -1,44 +1,28 @@
-"""mapInPandas RPC source stage against the mock chain."""
+"""An RPC error comes back as a row, not as a task failure, when the
+method is a column of a DataFrame fed to the registered ``ethereum_rpc``
+UDF (the engine's one RPC ingestion path), against the session mock
+chain."""
 
 import json
-import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from agnostic_blockchain_etl_spark.operators.rpc_source import (
-    block_range_requests, rpc_response_stage)
-from tests import mock_chain as mc
-
 
 @pytest.fixture(scope="module")
 def spark():
-    os.environ["AGN_RPC_MOCK"] = "tests.mock_chain:transport"
     from agnostic_blockchain_etl_spark.session import get_session
-    s = get_session(master="local[8]",
-                    conf={"spark.sql.shuffle.partitions": "8"})
-    yield s
-
-
-def test_block_range_fanout(spark):
-    reqs = block_range_requests(spark, 0, 49, "eth_getBlockByNumber",
-                                extra_params=["false"], num_partitions=4)
-    out = rpc_response_stage(reqs, "mock://chain")
-    rows = out.collect()
-    assert len(rows) == 50
-    by_n = {r["n"]: json.loads(r["response"]) for r in rows}
-    assert by_n[7]["error"] is None
-    assert by_n[7]["value"]["hash"] == "0x" + mc.block_hash(7).hex()
-    # pass-through columns survive the stage
-    assert set(out.columns) == {"n", "method", "params", "response"}
+    return get_session(master="local[4]",
+                       conf={"spark.sql.shuffle.partitions": "4"})
 
 
 def test_error_envelope_not_exception(spark):
     reqs = spark.createDataFrame(
-        [(0, "bogus_method", "[]")], "n LONG, method STRING, params STRING")
-    out = rpc_response_stage(reqs, "mock://chain").collect()
-    env = json.loads(out[0]["response"])
+        [(0, "bogus_method")], "n LONG, method STRING")
+    out = reqs.select(
+        "n", F.expr("ethereum_rpc(method, array(), "
+                    "'mock://chain#max-retries=0')").alias("response"))
+    rows = out.collect()
+    assert [r["n"] for r in rows] == [0]
+    env = json.loads(rows[0]["response"])
     assert env["value"] is None and "bogus_method" in env["error"]
