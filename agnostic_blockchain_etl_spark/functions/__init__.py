@@ -6,19 +6,19 @@ Pure-Python kernels + Spark registration:
 - ``keccak``  — keccak256 (Ethereum padding variant)
 - ``abi``     — signature parsing, ABI encode/decode, evm_decode_event/call
 - ``rpc``     — ethereum_rpc / ethereum_rpc_call with fragment options
-- ``registry``— ``register_all(spark)`` + JVM-native column equivalents
+- ``registry``— ``register_all(spark)``
 """
 
 from .abi import evm_decode_call, evm_decode_event
 from .hex import (evm_hex_decode, evm_hex_decode_int, evm_hex_encode,
                   evm_hex_encode_int)
 from .keccak import keccak256, keccak256_hex
-from .registry import native, register_all
+from .registry import register_all
 from .rpc import ethereum_rpc, ethereum_rpc_call
 
 __all__ = [
     "evm_decode_call", "evm_decode_event", "evm_hex_decode",
     "evm_hex_decode_int", "evm_hex_encode", "evm_hex_encode_int",
-    "keccak256", "keccak256_hex", "native", "register_all",
+    "keccak256", "keccak256_hex", "register_all",
     "ethereum_rpc", "ethereum_rpc_call",
 ]

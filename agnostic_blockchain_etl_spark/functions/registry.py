@@ -22,9 +22,6 @@ call site runs once per input row (``tests/test_rpc_call_counts.py``
 pins the count for every ``examples/*_ingest`` pipeline). These two
 UDFs are the engine's only RPC ingestion path: every template, per-row
 ``eth_call`` and multi-call-per-block buffer goes through them.
-Where possible prefer the *native column expressions* in ``native``
-below (hex encode/decode compile to JVM ``unhex``/``hex`` and stay
-inside whole-stage codegen — no Python at all).
 """
 
 from __future__ import annotations
@@ -32,43 +29,12 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (BinaryType, DecimalType, LongType, StringType)
 
 from . import abi, hex as hexmod, keccak, rpc
 
-
-
-# ---------------------------------------------------------------------------
-# Native (JVM-side, codegen-friendly) equivalents — use these in DataFrame
-# code; the Python UDFs below exist for SQL-name parity with the reference.
-# ---------------------------------------------------------------------------
-
-class native:
-    """Column-expression versions that never leave the JVM."""
-
-    @staticmethod
-    def evm_hex_decode(col: Column | str) -> Column:
-        c = F.col(col) if isinstance(col, str) else col
-        h = F.regexp_replace(c, "^0[xX]", "")
-        # left-pad odd-length nibble strings, '' → empty binary
-        h = F.when(F.length(h) % 2 == 1, F.concat(F.lit("0"), h)).otherwise(h)
-        return F.unhex(h)
-
-    @staticmethod
-    def evm_hex_decode_int(col: Column | str) -> Column:
-        """≤63-bit hex quantity → long (JVM ``conv``)."""
-        c = F.col(col) if isinstance(col, str) else col
-        h = F.regexp_replace(c, "^0[xX]", "")
-        return F.when(c.isNull(), F.lit(None).cast(LongType())).otherwise(
-            F.conv(F.when(h == "", F.lit("0")).otherwise(h), 16, 10).cast(LongType()))
-
-    @staticmethod
-    def evm_hex_encode(col: Column | str) -> Column:
-        c = F.col(col) if isinstance(col, str) else col
-        return F.concat(F.lit("0x"), F.lower(F.hex(c)))
 
 
 # ---------------------------------------------------------------------------

@@ -43,7 +43,7 @@ class TipTrackerConfig:
     """internal/pipeline/tip_tracker.go:17-30 (PollInterval default 10s)."""
     Tip: str = "tip.sql"
     PollIntervalS: float = 10.0
-    StopAfter: int | None = None  # emit at most N tips (tests/backfills)
+    StopAfter: int | None = None  # stop after N non-null tips (tests/backfills)
 
 
 @dataclass
@@ -69,12 +69,6 @@ class StepConfig:
     Sequencer: dict | None = None
     Workers: int = 1
     ChanSize: int = 1
-
-
-@dataclass
-class FinalizerConfig:
-    """internal/pipeline/finalizer.go:16-26."""
-    pass
 
 
 @dataclass
@@ -116,7 +110,6 @@ class PipelineConfig:
     TipTracker: TipTrackerConfig = field(default_factory=TipTrackerConfig)
     Batcher: BatcherConfig = field(default_factory=BatcherConfig)
     Steps: list[StepConfig] = field(default_factory=list)
-    Finalizer: FinalizerConfig = field(default_factory=FinalizerConfig)
     Retry: RetryStrategy = field(default_factory=RetryStrategy)
     Vars: dict = field(default_factory=dict)
 
@@ -180,8 +173,7 @@ class PipelineConfig:
 # Batcher section wrote raw['BATCHER']['MAXBATCHSIZE'] and changed
 # nothing).
 _CANON_KEYS = {k.lower(): k for k in (
-    "Engine", "Init", "TipTracker", "Batcher", "Steps", "Finalizer",
-    "Retry", "Vars",
+    "Engine", "Init", "TipTracker", "Batcher", "Steps", "Retry", "Vars",
     "Setup", "Start", "DefaultStart", "ForceStart",
     "Tip", "PollInterval", "StopAfter",
     "MaxBatchSize", "MaxBatchSizeMultiplier", "MaxRetries",

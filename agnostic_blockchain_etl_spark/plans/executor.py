@@ -12,6 +12,8 @@ import re
 import time
 from dataclasses import dataclass, field
 
+from pyspark.errors import PySparkException
+
 
 @dataclass
 class QueryMetadata:
@@ -95,6 +97,11 @@ def split_statements(sql: str) -> list[str]:
     return [p.strip() for p in parts if p.strip()]
 
 
+# error conditions of ``spark.conf.set`` on a conf that cannot change
+# after the session starts (static SQL confs, Spark core confs)
+_CANNOT_MODIFY_CONF = ("CANNOT_MODIFY_STATIC_CONFIG", "CANNOT_MODIFY_CONFIG")
+
+
 class SparkExecutor(Executor):
     """Executes rendered SQL via ``spark.sql`` (thread-safe; concurrent
     stage workers run in FAIR scheduler pools set by the Stage)."""
@@ -103,12 +110,15 @@ class SparkExecutor(Executor):
         self.spark = spark
 
     def apply_settings(self, settings: dict) -> None:
+        """Confs fixed at session start are skipped; any other error (a
+        value of the wrong type, say) fails the stage."""
         for k, v in (settings or {}).items():
             if k.startswith("spark."):
                 try:
                     self.spark.conf.set(k, str(v))
-                except Exception:
-                    pass  # static confs can't change post-start; skip
+                except PySparkException as e:
+                    if e.getCondition() not in _CANNOT_MODIFY_CONF:
+                        raise
 
     def exec(self, sql: str) -> QueryMetadata:
         t0 = time.monotonic()

@@ -2,8 +2,12 @@
 
 The reference assembles goroutines linked by bounded channels
 (pipeline.go:64-149): TipTracker → Batcher → Steps (Stage xor Sequencer)
-→ Finalizer. This module re-implements that dataflow with Python threads
-and bounded ``queue.Queue``s over a shared (thread-safe) SparkSession.
+→ Finalizer. Here TipTracker and Batcher are one loop, ``run_batcher``:
+it polls tip.sql and cuts the new range into batches itself, so no tip
+queue or polling thread sits between them. The other components follow
+the reference: each runs on a Python thread under ``_guarded`` (an error
+in any cancels all), linked by bounded ``queue.Queue``s over a shared
+(thread-safe) SparkSession.
 
 Scale stance: intra-query parallelism belongs to Spark (partitions, AQE);
 this layer adds *inter-batch* concurrency — N worker threads each driving
@@ -13,6 +17,7 @@ plus in-order commit, which Spark does not provide across jobs.
 
 from __future__ import annotations
 
+import heapq
 import logging
 import queue
 import threading
@@ -20,11 +25,13 @@ import time
 import uuid as uuidlib
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
+
 from .config import (BatcherConfig, InitConfig, PipelineConfig, StageConfig,
-                     StepConfig, TipTrackerConfig)
+                     TipTrackerConfig)
 from .executor import Executor, select_single_row
 from .templates import TemplateSet
-from .types import CLOSE, Batch, BatchBuffer
+from .types import CLOSE, Batch
 
 log = logging.getLogger("agnostic_blockchain_etl_spark.pipeline")
 
@@ -73,6 +80,20 @@ def _get(ctx: _Ctx, q: queue.Queue):
             continue
 
 
+def _guarded(ctx: _Ctx, fn, *args, out: queue.Queue | None = None) -> None:
+    """Run the component ``fn(ctx, *args)``. Any error it raises cancels the
+    whole pipeline; a normal return closes ``out`` (the analog of closing
+    a Go channel), so the next component drains and ends."""
+    try:
+        fn(ctx, *args)
+        if out is not None:
+            _put(ctx, out, CLOSE)
+    except PipelineCancelled:
+        pass
+    except BaseException as e:
+        ctx.fail(e)
+
+
 # ---------------------------------------------------------------------------
 # Init (internal/pipeline/init.go:11-66)
 # ---------------------------------------------------------------------------
@@ -97,95 +118,37 @@ def run_init(executor: Executor, templates: TemplateSet, vars: dict,
 
 
 # ---------------------------------------------------------------------------
-# TipTracker (internal/pipeline/tip_tracker.go:32-96)
+# TipTracker + Batcher (internal/pipeline/tip_tracker.go:32-96,
+# batcher.go:24-94)
 # ---------------------------------------------------------------------------
 
-def run_tip_tracker(ctx: _Ctx, executor: Executor, templates: TemplateSet,
-                    vars: dict, out: queue.Queue, conf: TipTrackerConfig,
-                    consumer_done: threading.Event | None = None) -> None:
-    """Poll tip.sql every PollInterval; re-send even if unchanged
-    (tip_tracker.go:70-75 — the Batcher filters non-increasing tips).
-
-    ``consumer_done`` is set by the Batcher when IT exits (its own
-    StopAfter, or its input closing): with nobody draining the
-    maxsize-1 tip queue, an unbounded tracker would block in `_put`
-    forever and `run_pipeline`'s join would hang even though all work
-    finished (round-7 review finding — Batcher.StopAfter set without
-    TipTracker.StopAfter deadlocked the process)."""
-    def _stopped() -> bool:
-        return ctx.cancel.is_set() or (consumer_done is not None
-                                       and consumer_done.is_set())
-
-    sent = 0
-    try:
-        while not _stopped():
-            row = select_single_row(executor, templates.render(conf.Tip, vars))
-            tip = row.get("tip")
-            if tip is not None:
-                while not _stopped():          # bounded put, stop-aware
-                    try:
-                        out.put(int(tip), timeout=0.1)
-                        break
-                    except queue.Full:
-                        continue
-                else:
-                    break
-                sent += 1
-                if conf.StopAfter is not None and sent >= conf.StopAfter:
-                    break
-            # sleep in small slices so cancel/consumer-exit is responsive
-            deadline = time.monotonic() + conf.PollIntervalS
-            while time.monotonic() < deadline and not _stopped():
-                time.sleep(min(0.05, conf.PollIntervalS))
-    except PipelineCancelled:
-        pass
-    except BaseException as e:
-        ctx.fail(e)
-    finally:
-        _safe_close(ctx, out)
-
-
-# ---------------------------------------------------------------------------
-# Batcher (internal/pipeline/batcher.go:24-94)
-# ---------------------------------------------------------------------------
-
-def run_batcher(ctx: _Ctx, vars: dict, start: int, tips: queue.Queue,
-                out: queue.Queue, conf: BatcherConfig,
-                done: threading.Event | None = None) -> None:
-    """Cut ``[start, tip]`` into ≤MaxBatchSize ranges; inject NUMBER/START/
-    END vars (batcher.go:76-78); ignore non-increasing tips (batcher.go:55-57).
-    ``done`` is set on ANY exit so the tip tracker stops producing into a
-    queue nobody drains (see `run_tip_tracker`)."""
-    number = 0
-    cursor = start
-    last_tip: int | None = None
-    try:
-        while True:
-            item = _get(ctx, tips)
-            if item is CLOSE:
-                break
-            tip = int(item)
-            if last_tip is not None and tip <= last_tip:
-                continue
-            last_tip = tip
+def run_batcher(ctx: _Ctx, executor: Executor, templates: TemplateSet,
+                vars: dict, start: int, out: queue.Queue,
+                tip_conf: TipTrackerConfig, conf: BatcherConfig) -> None:
+    """Poll tip.sql every PollInterval and cut ``[cursor, tip]`` into
+    ≤MaxBatchSize ranges with NUMBER/START/END vars (batcher.go:73-78).
+    A non-increasing tip cuts nothing, since the cursor is already past
+    it (batcher.go:55-57). Stops after TipTracker.StopAfter non-null tips
+    or Batcher.StopAfter batches; a cancel wakes the poll wait."""
+    number, cursor, tips = 0, start, 0
+    while True:
+        row = select_single_row(executor, templates.render(tip_conf.Tip, vars))
+        if row.get("tip") is not None:
+            tip = int(row["tip"])
+            tips += 1
             while cursor <= tip:
-                end = min(cursor + conf.MaxBatchSize - 1, tip)  # batcher.go:73
-                b = Batch(number=number, start=cursor, end=end,
-                          vars={**vars, "NUMBER": number,
-                                "START": cursor, "END": end})
-                _put(ctx, out, b)
+                end = min(cursor + conf.MaxBatchSize - 1, tip)
+                _put(ctx, out, Batch(number=number, start=cursor, end=end,
+                                     vars={**vars, "NUMBER": number,
+                                           "START": cursor, "END": end}))
                 number += 1
                 cursor = end + 1
                 if conf.StopAfter is not None and number >= conf.StopAfter:
                     return
-    except PipelineCancelled:
-        pass
-    except BaseException as e:
-        ctx.fail(e)
-    finally:
-        if done is not None:
-            done.set()
-        _safe_close(ctx, out)
+            if tip_conf.StopAfter is not None and tips >= tip_conf.StopAfter:
+                return
+        if ctx.cancel.wait(tip_conf.PollIntervalS):
+            return
 
 
 # ---------------------------------------------------------------------------
@@ -207,83 +170,57 @@ def run_stage_workers(ctx: _Ctx, executor: Executor, templates: TemplateSet,
                       scheduler_hook=None) -> None:
     """N worker threads sharing in/out queues (pipeline.go:100-143). Each
     renders + executes the stage's file list per batch in order
-    (stage.go:101-106). Any error cancels the whole pipeline."""
+    (stage.go:101-106). Returns when every worker has."""
     metrics = metrics if metrics is not None else {}
     lock = threading.Lock()
 
-    def worker(widx: int) -> None:
+    def worker(ctx: _Ctx) -> None:
         if scheduler_hook:
             scheduler_hook(pool_name)  # set FAIR pool for this thread's jobs
         if conf.Settings:
             executor.apply_settings(conf.Settings)  # stage.go:88-90 parity
-        try:
-            while True:
-                item = _get(ctx, inq)
-                if item is CLOSE:
-                    # Go's closed channel wakes every receiver; our sentinel
-                    # is consumed — re-enqueue it for sibling workers.
-                    _put(ctx, inq, CLOSE)
-                    return
-                batch: Batch = item
-                for name in conf.Files:
-                    t0 = time.monotonic()
-                    md = executor.exec(templates.render(name, batch.vars))
-                    with lock:
-                        m = metrics.setdefault(name, StageMetrics())
-                        m.executions += 1
-                        m.rows += md.rows
-                        m.elapsed_s += time.monotonic() - t0
-                _put(ctx, out, batch)
-        except PipelineCancelled:
-            pass
-        except BaseException as e:
-            ctx.fail(e)
+        while (batch := _get(ctx, inq)) is not CLOSE:
+            for name in conf.Files:
+                t0 = time.monotonic()
+                md = executor.exec(templates.render(name, batch.vars))
+                with lock:
+                    m = metrics.setdefault(name, StageMetrics())
+                    m.executions += 1
+                    m.rows += md.rows
+                    m.elapsed_s += time.monotonic() - t0
+            _put(ctx, out, batch)
+        # Go's closed channel wakes every receiver; our sentinel is
+        # consumed — re-enqueue it for sibling workers.
+        _put(ctx, inq, CLOSE)
 
-    threads = [threading.Thread(target=worker, args=(i,),
+    threads = [threading.Thread(target=_guarded, args=(ctx, worker),
                                 name=f"{pool_name}-w{i}", daemon=True)
                for i in range(workers)]
     for t in threads:
         t.start()
     for t in threads:
         t.join()
-    _safe_close(ctx, out)
 
 
 # ---------------------------------------------------------------------------
 # Sequencer (internal/pipeline/sequencer.go:24-84)
 # ---------------------------------------------------------------------------
 
-def run_sequencer(ctx: _Ctx, inq: queue.Queue, out: queue.Queue,
-                  start_number: int = 0) -> None:
-    """Restore total order: buffer out-of-order batches, emit only while the
-    buffered head equals the next expected sequence number
-    (sequencer.go:52-80)."""
-    buf = BatchBuffer()
-    next_number = start_number
-    try:
-        while True:
-            item = _get(ctx, inq)
-            if item is CLOSE:
-                break
-            buf.push(item)
-            while buf.peek() is not None and buf.peek().number == next_number:
-                _put(ctx, out, buf.pop())
-                next_number += 1
-        # drain whatever is in order at close (a gap here means lost batches
-        # upstream — surface it rather than silently dropping)
-        while buf.peek() is not None and buf.peek().number == next_number:
-            _put(ctx, out, buf.pop())
+def run_sequencer(ctx: _Ctx, inq: queue.Queue, out: queue.Queue) -> None:
+    """Restore total order: hold out-of-order batches in a min-heap and
+    emit while its head is the next expected number (sequencer.go:52-80).
+    A batch still held at close means one was lost upstream."""
+    held: list[Batch] = []
+    next_number = 0
+    while (batch := _get(ctx, inq)) is not CLOSE:
+        heapq.heappush(held, batch)
+        while held and held[0].number == next_number:
+            _put(ctx, out, heapq.heappop(held))
             next_number += 1
-        if len(buf):
-            raise RuntimeError(
-                f"sequencer closed with {len(buf)} out-of-order batches "
-                f"buffered (next expected {next_number})")
-    except PipelineCancelled:
-        pass
-    except BaseException as e:
-        ctx.fail(e)
-    finally:
-        _safe_close(ctx, out)
+    if held:
+        raise RuntimeError(
+            f"sequencer closed with {len(held)} out-of-order batches "
+            f"buffered (next expected {next_number})")
 
 
 # ---------------------------------------------------------------------------
@@ -308,39 +245,14 @@ def run_finalizer(ctx: _Ctx, inq: queue.Queue, stats: FinalizerStats,
     """Terminal consumer: count items ``(end-start)+1``, track maxEnd, log
     throughput (finalizer.go:53-67); ``on_commit(batch)`` is the commit
     hook (cursor checkpoint, temp-view cleanup)."""
-    try:
-        while True:
-            item = _get(ctx, inq)
-            if item is CLOSE:
-                return
-            batch: Batch = item
-            if on_commit is not None:
-                on_commit(batch)
-            stats.items += batch.items
-            stats.batches += 1
-            stats.max_end = max(stats.max_end, batch.end)
-            log.info("finalized batch %d [%d,%d] — %.1f items/s",
-                     batch.number, batch.start, batch.end, stats.items_per_s)
-    except PipelineCancelled:
-        pass
-    except BaseException as e:
-        ctx.fail(e)
-
-
-def _safe_close(ctx: _Ctx, q: queue.Queue) -> None:
-    """Enqueue CLOSE, blocking as long as the pipeline is healthy.
-
-    A slow consumer (e.g. a finalizer commit writing a sink) may hold the
-    queue full for a long time — keep trying while the pipeline is alive;
-    only a cancelled pipeline stops the close (its consumers exit via
-    ctx). Never give up silently: an undelivered CLOSE deadlocks the
-    downstream _get loop."""
-    while not ctx.cancel.is_set():
-        try:
-            q.put(CLOSE, timeout=0.1)
-            return
-        except queue.Full:
-            continue
+    while (batch := _get(ctx, inq)) is not CLOSE:
+        if on_commit is not None:
+            on_commit(batch)
+        stats.items += batch.items
+        stats.batches += 1
+        stats.max_end = max(stats.max_end, batch.end)
+        log.info("finalized batch %d [%d,%d] — %.1f items/s",
+                 batch.number, batch.start, batch.end, stats.items_per_s)
 
 
 # ---------------------------------------------------------------------------
@@ -350,7 +262,6 @@ def _safe_close(ctx: _Ctx, q: queue.Queue) -> None:
 @dataclass
 class PipelineResult:
     stats: FinalizerStats
-    stage_metrics: list[dict]
     start: int
 
 
@@ -381,51 +292,42 @@ def run_pipeline(executor: Executor, templates: TemplateSet,
     start = run_init(executor, templates, run_vars, conf.Init)
 
     ctx = _Ctx()
-    tip_q: queue.Queue = queue.Queue(maxsize=1)    # pipeline.go:66
-    batch_q: queue.Queue = queue.Queue(maxsize=3)  # pipeline.go:67
-
     threads: list[threading.Thread] = []
 
-    def spawn(fn, *args, name: str):
-        t = threading.Thread(target=fn, args=args, name=name, daemon=True)
+    def spawn(name: str, fn, *args, out: queue.Queue | None = None) -> None:
+        t = threading.Thread(target=_guarded, args=(ctx, fn, *args),
+                             kwargs={"out": out}, name=name, daemon=True)
         threads.append(t)
         t.start()
 
-    batcher_done = threading.Event()   # tips unconsumed past this point
-    spawn(run_tip_tracker, ctx, executor, templates, run_vars, tip_q,
-          conf.TipTracker, batcher_done, name="tip-tracker")
-    spawn(run_batcher, ctx, run_vars, start, tip_q, batch_q, conf.Batcher,
-          batcher_done, name="batcher")
+    batch_q: queue.Queue = queue.Queue(maxsize=3)  # pipeline.go:67
+    spawn("batcher", run_batcher, executor, templates, run_vars, start,
+          batch_q, conf.TipTracker, conf.Batcher, out=batch_q)
 
     if stage_metrics_out is not None:
         stage_metrics_out.clear()   # a retry re-run must not duplicate
-    stage_metrics: list[dict] = (stage_metrics_out
-                                 if stage_metrics_out is not None else [])
     inq = batch_q
     for i, step in enumerate(conf.Steps):
         outq: queue.Queue = queue.Queue(maxsize=step.ChanSize)
         if step.Sequencer is not None:
-            spawn(run_sequencer, ctx, inq, outq, name=f"sequencer-{i}")
+            spawn(f"sequencer-{i}", run_sequencer, inq, outq, out=outq)
         else:
             m: dict[str, StageMetrics] = {}
-            stage_metrics.append(m)
-            spawn(run_stage_workers, ctx, executor, templates, inq, outq,
-                  step.Stage, step.Workers, f"stage-{i}", m, scheduler_hook,
-                  name=f"stage-{i}")
+            if stage_metrics_out is not None:
+                stage_metrics_out.append(m)
+            spawn(f"stage-{i}", run_stage_workers, executor, templates, inq,
+                  outq, step.Stage, step.Workers, f"stage-{i}", m,
+                  scheduler_hook, out=outq)
         inq = outq
 
     stats = FinalizerStats()
-    fin = threading.Thread(target=run_finalizer,
-                           args=(ctx, inq, stats, on_commit),
-                           name="finalizer", daemon=True)
-    fin.start()
-    threads.append(fin)
+    spawn("finalizer", run_finalizer, inq, stats, on_commit)
 
     for t in threads:
         t.join()
     if ctx.error is not None:
         raise ctx.error
-    return PipelineResult(stats=stats, stage_metrics=stage_metrics, start=start)
+    return PipelineResult(stats=stats, start=start)
 
 
 # ---------------------------------------------------------------------------
@@ -437,6 +339,12 @@ _OOM_MARKERS = ("outofmemory", "memory limit", "memorylimitexceeded",
 
 
 def is_memory_error(e: BaseException) -> bool:
+    """Memory errors are retried at a smaller batch size. A Spark analysis
+    or parse error (``ParseException`` is an ``AnalysisException``) is a
+    broken query, never a memory error, even when it names a column like
+    ``totalMemory``."""
+    if isinstance(e, AnalysisException):
+        return False
     s = str(e).lower().replace(" ", "")
     return isinstance(e, MemoryError) or any(
         m.replace(" ", "") in s for m in _OOM_MARKERS)

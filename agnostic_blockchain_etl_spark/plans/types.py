@@ -3,14 +3,13 @@
 ``Batch`` is the unit flowing through the pipeline: a contiguous cursor
 range ``[start, end]`` plus per-batch template vars (types.go:17-23 —
 ``Batch{Number, Conn, Start, End, Vars}``; the per-batch Conn becomes a
-per-batch view-name namespace in Spark, SURVEY.md §7.2).
-
-``BatchBuffer`` is the sequencer's sorted reorder buffer (types.go:27-35).
+per-batch view-name namespace in Spark, SURVEY.md §7.2). Batches order
+by number, so the sequencer keeps its reorder buffer (types.go:27-35) as
+a ``heapq`` list.
 """
 
 from __future__ import annotations
 
-import heapq
 from dataclasses import dataclass, field
 
 
@@ -27,26 +26,6 @@ class Batch:
     @property
     def items(self) -> int:
         return self.end - self.start + 1
-
-
-class BatchBuffer:
-    """Min-heap of batches by sequence number (sorted insert parity with
-    types.go:27-35's insertion into a sorted slice)."""
-
-    def __init__(self):
-        self._heap: list[Batch] = []
-
-    def push(self, b: Batch) -> None:
-        heapq.heappush(self._heap, b)
-
-    def peek(self) -> Batch | None:
-        return self._heap[0] if self._heap else None
-
-    def pop(self) -> Batch:
-        return heapq.heappop(self._heap)
-
-    def __len__(self) -> int:
-        return len(self._heap)
 
 
 # Sentinel signalling end-of-stream on an inter-component queue (the analog

@@ -3,9 +3,9 @@
 -- ARRAY JOIN over the receipts JSON + LEFT JOIN deps ON n). The per-block
 -- metadata join stays inside one row here because Spark lets us explode
 -- lazily without losing the enclosing block columns.
--- arrayMap(x -> evm_hex_decode(x), topics) maps to a JVM-native
--- transform lambda (Python UDFs cannot appear in lambda bodies; unhex is
--- the registered native equivalent — functions/registry.py `native`).
+-- arrayMap(x -> evm_hex_decode(x), topics) maps to a plain Spark SQL
+-- transform lambda over unhex (Python UDFs cannot appear in lambda
+-- bodies).
 CREATE OR REPLACE TEMPORARY VIEW buffer_{{.START}}_{{.END}} AS
 WITH deps AS (
     SELECT

@@ -5,9 +5,11 @@ permutation; init precedence; retrier shrink)."""
 import queue
 import re
 import threading
+import time
 
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.errors import AnalysisException
 
 from agnostic_blockchain_etl_spark.plans.config import (BatcherConfig,
                                                         InitConfig,
@@ -46,12 +48,26 @@ class FakeExecutor(Executor):
 
 
 def drain(q):
+    """What a finished component left on ``q``, up to CLOSE if closed."""
     out = []
-    while True:
-        item = q.get(timeout=5)
+    while not q.empty():
+        item = q.get_nowait()
         if item is CLOSE:
-            return out
+            break
         out.append(item)
+    return out
+
+
+def cut(start, tips, **batcher):
+    """Batches ``run_batcher`` cuts from ``start`` while tip.sql answers
+    ``tips`` in turn (one poll each, no wait between polls)."""
+    answers = iter(tips)
+    ex = FakeExecutor(selects=[(r"head", lambda: [{"tip": next(answers)}])])
+    out = queue.Queue()
+    run_batcher(_Ctx(), ex, _pipeline_templates(), {}, start, out,
+                TipTrackerConfig(PollIntervalS=0, StopAfter=len(tips)),
+                BatcherConfig(**batcher))
+    return drain(out)
 
 
 class TestBatcher:
@@ -60,12 +76,7 @@ class TestBatcher:
     @settings(max_examples=50, deadline=None)
     def test_covers_range_exactly_once(self, start, width, extra):
         tip = start + extra
-        ctx = _Ctx()
-        tips, out = queue.Queue(), queue.Queue()
-        tips.put(tip)
-        tips.put(CLOSE)
-        run_batcher(ctx, {}, start, tips, out, BatcherConfig(MaxBatchSize=width))
-        batches = drain(out)
+        batches = cut(start, [tip], MaxBatchSize=width)
         covered = [c for b in batches for c in range(b.start, b.end + 1)]
         assert covered == list(range(start, tip + 1))
         assert all(b.items <= width for b in batches)
@@ -74,23 +85,12 @@ class TestBatcher:
             assert b.vars["START"] == b.start and b.vars["END"] == b.end
 
     def test_ignores_non_increasing_tips(self):
-        ctx = _Ctx()
-        tips, out = queue.Queue(), queue.Queue()
-        for t in [10, 10, 5, 12]:
-            tips.put(t)
-        tips.put(CLOSE)
-        run_batcher(ctx, {}, 0, tips, out, BatcherConfig(MaxBatchSize=100))
-        batches = drain(out)
+        batches = cut(0, [10, 10, 5, 12], MaxBatchSize=100)
         # [0,10] then [11,12] — duplicates/regressions produce nothing
         assert [(b.start, b.end) for b in batches] == [(0, 10), (11, 12)]
 
     def test_stop_after(self):
-        ctx = _Ctx()
-        tips, out = queue.Queue(), queue.Queue()
-        tips.put(100)
-        tips.put(CLOSE)
-        run_batcher(ctx, {}, 0, tips, out, BatcherConfig(MaxBatchSize=10, StopAfter=3))
-        assert len(drain(out)) == 3
+        assert len(cut(0, [100], MaxBatchSize=10, StopAfter=3)) == 3
 
 
 class TestSequencer:
@@ -110,9 +110,8 @@ class TestSequencer:
         inq, out = queue.Queue(), queue.Queue()
         inq.put(Batch(number=1, start=1, end=1))  # 0 never arrives
         inq.put(CLOSE)
-        run_sequencer(ctx, inq, out)
-        assert ctx.error is not None
-        assert "out-of-order" in str(ctx.error)
+        with pytest.raises(RuntimeError, match="out-of-order"):
+            run_sequencer(ctx, inq, out)
 
 
 class TestInit:
@@ -221,13 +220,13 @@ class TestPipelineEndToEnd:
 
     def test_batcher_stop_after_terminates_without_tip_bound(self):
         """Review finding: Batcher.StopAfter WITHOUT TipTracker.StopAfter
-        deadlocked — the batcher returned, nobody drained the maxsize-1
-        tip queue, and the unbounded tracker blocked forever in its put,
-        hanging run_pipeline's join. The batcher-done event must stop
-        the tracker."""
+        must still end the run. The loop returns after its third batch,
+        which the first tip already gives, so tip.sql is polled once."""
+        polls = []
         ex = FakeExecutor(selects=[
             (r"resume", [{"start": 0}]),
-            (r"head", [{"tip": 10_000}]),   # far more tips than needed
+            # far more blocks than needed
+            (r"head", lambda: polls.append(1) or [{"tip": 10_000}]),
         ])
         conf = PipelineConfig.from_dict({
             "Batcher": {"MaxBatchSize": 10, "StopAfter": 3},
@@ -254,6 +253,35 @@ class TestPipelineEndToEnd:
         assert not t.is_alive(), "run_pipeline hung after Batcher.StopAfter"
         assert committed == [0, 1, 2]
         assert done["result"].stats.items == 30
+        assert len(polls) == 1
+
+    def test_stage_error_wakes_poll_wait(self):
+        """With a 10 s PollInterval and no StopAfter, the loop sits in its
+        poll wait after the first tip; a stage error must cancel that
+        wait, so run_pipeline raises long before the next poll."""
+        class Boom(FakeExecutor):
+            def exec(self, sql):
+                if sql.startswith("insert"):
+                    raise RuntimeError("stage failure")
+                return super().exec(sql)
+
+        ex = Boom(selects=[(r"resume", [{"start": 0}]), (r"head", [{"tip": 5}])])
+        conf = _pipeline_conf()
+        conf.TipTracker.PollIntervalS = 10.0
+        conf.TipTracker.StopAfter = None
+        done = {}
+
+        def run():
+            t0 = time.monotonic()
+            with pytest.raises(RuntimeError, match="stage failure"):
+                run_pipeline(ex, _pipeline_templates(), conf)
+            done["elapsed_s"] = time.monotonic() - t0
+
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(timeout=30)
+        assert not t.is_alive(), "run_pipeline hung after a stage error"
+        assert done["elapsed_s"] < 2.0
 
     def test_stage_error_cancels_pipeline(self):
         class Boom(FakeExecutor):
@@ -285,6 +313,22 @@ class TestPipelineEndToEnd:
         # the shrink is per-run state — caller's config is restored
         assert conf.Batcher.MaxBatchSize == 20
 
+    def test_retrier_runs_analysis_error_once(self):
+        """A broken query is not retried at smaller batch sizes, even when
+        its message names a column like ``totalMemory``."""
+        runs = []
+
+        class Broken(FakeExecutor):
+            def exec(self, sql):
+                raise AnalysisException(UNRESOLVED_TOTAL_MEMORY)
+
+        ex = Broken(selects=[
+            (r"resume", lambda: runs.append(1) or [{"start": 0}]),
+            (r"head", [{"tip": 5}])])
+        with pytest.raises(AnalysisException, match="totalMemory"):
+            run_with_retry(ex, _pipeline_templates(), _pipeline_conf())
+        assert len(runs) == 1
+
     def test_retrier_propagates_non_oom(self):
         class Bad(FakeExecutor):
             def exec(self, sql):
@@ -301,6 +345,14 @@ class TestMemoryErrorClassifier:
         assert is_memory_error(RuntimeError("java.lang.OutOfMemoryError"))
         assert is_memory_error(MemoryError())
         assert not is_memory_error(ValueError("bad sql"))
+
+    def test_analysis_error_is_not_memory_error(self):
+        assert not is_memory_error(AnalysisException(UNRESOLVED_TOTAL_MEMORY))
+
+
+UNRESOLVED_TOTAL_MEMORY = (
+    "[UNRESOLVED_COLUMN.WITH_SUGGESTION] A column with name `totalMemory` "
+    "cannot be resolved.")
 
 
 def test_cli_store_prune(tmp_path, capsys):

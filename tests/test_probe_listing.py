@@ -47,7 +47,10 @@ class TestMetricsServer:
 
 
 class TestStageSettings:
-    def test_settings_applied_at_worker_start(self, spark):
+    @staticmethod
+    def _run_stage(spark, settings):
+        """Run a one-worker stage with ``settings`` over an empty input;
+        returns the pipeline context, which holds any error."""
         import queue
 
         from agnostic_blockchain_etl_spark.plans.config import StageConfig
@@ -57,15 +60,36 @@ class TestStageSettings:
         from agnostic_blockchain_etl_spark.plans.templates import TemplateSet
         from agnostic_blockchain_etl_spark.plans.types import CLOSE
 
-        spark.conf.set("spark.sql.cbo.enabled", "false")
         ctx = _Ctx()
         inq, outq = queue.Queue(), queue.Queue(maxsize=10)
         inq.put(CLOSE)
         run_stage_workers(
             ctx, SparkExecutor(spark), TemplateSet({}), inq, outq,
-            StageConfig(Files=[], Settings={"spark.sql.cbo.enabled": "true"}),
-            workers=1)
+            StageConfig(Files=[], Settings=settings), workers=1)
+        return ctx
+
+    def test_settings_applied_at_worker_start(self, spark):
+        spark.conf.set("spark.sql.cbo.enabled", "false")
+        self._run_stage(spark, {"spark.sql.cbo.enabled": "true"})
         assert spark.conf.get("spark.sql.cbo.enabled") == "true"
+
+    def test_unmodifiable_confs_are_skipped(self, spark, tmp_path):
+        """A static SQL conf and a Spark core conf cannot change after
+        start: both are skipped, and the settings after them still apply."""
+        spark.conf.set("spark.sql.cbo.enabled", "false")
+        ctx = self._run_stage(spark, {
+            "spark.sql.warehouse.dir": str(tmp_path),
+            "spark.executor.memory": "3g",
+            "spark.sql.cbo.enabled": "true"})
+        assert ctx.error is None
+        assert spark.conf.get("spark.sql.cbo.enabled") == "true"
+
+    def test_invalid_value_fails_pipeline(self, spark):
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        ctx = self._run_stage(spark, {"spark.sql.shuffle.partitions": "abc"})
+        assert ctx.cancel.is_set()
+        assert "INVALID_CONF_VALUE" in str(ctx.error)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 class TestPartitionListing:
