@@ -6,22 +6,34 @@ The reference activates its UDF bundle by server config
 reference's SQL (hex/keccak/ABI-decode expressions) runs near-verbatim via
 ``spark.sql``.
 
-Design notes (scale): the pure kernels (hex, keccak) are registered as
-**pandas UDFs** so values move executor→Python in Arrow record batches
-rather than pickled rows; the decode UDFs are pandas UDFs too (CPU-bound,
-benefit from batch amortization). The RPC functions are pandas UDFs as
-well: one transport is resolved per Arrow batch, so SQL-verbatim
-pipelines get connection/retry-state reuse. They are registered
-**nondeterministic**: a deterministic UDF is a pure function to the
-optimizer, which may evaluate it more than once per row. In
-``logs_ingest`` the ``size(receipts) > 0`` filter Spark infers from
-``explode(receipts)`` is pushed below the projection and clones the
-``eth_getBlockReceipts`` call into a second Python evaluation branch,
-so a block's receipts were fetched twice. Marked nondeterministic, each
-call site runs once per input row (``tests/test_rpc_call_counts.py``
-pins the count for every ``examples/*_ingest`` pipeline). These two
-UDFs are the engine's only RPC ingestion path: every template, per-row
-``eth_call`` and multi-call-per-block buffer goes through them.
+Design notes (scale): every Python UDF in a plan costs an Arrow round
+trip to a Python worker, so the ingest templates render the ≤64-bit hex
+kernels as Spark built-ins (``unhex``, ``conv``, ``hex``; SURVEY.md
+§2.7) through the template functions of ``plans/templates.py``, and
+``evm_hex_decode_dec`` is a SQL-defined function, like the ``agn_json_*``
+helpers: both inline into whole-stage codegen. The other hex kernels and
+``keccak256`` stay registered as **pandas UDFs** under the reference's
+names, for user SQL, ``operators/extended.py`` and Spark Connect clients
+(values move in Arrow record batches, not pickled rows); ``hex.py`` is
+the oracle both forms are tested against. The decode UDFs are pandas
+UDFs too (CPU-bound, benefit from batch amortization). The RPC functions
+are pandas UDFs as well: one transport is resolved per Arrow batch, so
+SQL-verbatim pipelines get connection/retry-state reuse.
+
+The RPC and decode UDFs are registered **nondeterministic**: a
+deterministic UDF is a pure function to the optimizer, which may
+evaluate it more than once per row. In ``logs_ingest`` the
+``size(receipts) > 0`` filter Spark infers from ``explode(receipts)`` is
+pushed below the projection and clones the ``eth_getBlockReceipts`` call
+into a second Python evaluation branch, so a block's receipts were
+fetched twice; in ``decoded_logs`` the ``$.error IS NULL`` filter on the
+decode did the same to ``evm_decode_event``, decoding every log twice.
+Marked nondeterministic, each call site runs once per input row
+(``tests/test_rpc_call_counts.py`` pins the RPC count for every
+``examples/*_ingest`` pipeline, ``tests/test_hex_builtins.py`` the plan
+shapes). The two RPC UDFs are the engine's only RPC ingestion path:
+every template, per-row ``eth_call`` and multi-call-per-block buffer
+goes through them.
 """
 
 from __future__ import annotations
@@ -31,7 +43,7 @@ import json
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (BinaryType, DecimalType, LongType, StringType)
+from pyspark.sql.types import BinaryType, LongType, StringType
 
 from . import abi, hex as hexmod, keccak, rpc
 
@@ -53,19 +65,6 @@ def _udf_hex_decode_int(s: pd.Series, t: pd.Series) -> pd.Series:
     return pd.Series([
         hexmod.evm_hex_decode_int(v, ty) if v is not None else None
         for v, ty in zip(s, t)])
-
-
-@pandas_udf(DecimalType(38, 0))
-def _udf_hex_decode_dec(s: pd.Series) -> pd.Series:
-    import decimal
-
-    def conv(v):
-        if v is None:
-            return None
-        n = hexmod.evm_hex_decode_int(v, "UInt256")
-        return decimal.Decimal(n) if n < 10 ** 38 else None
-
-    return s.map(conv)
 
 
 @pandas_udf(BinaryType())
@@ -156,6 +155,30 @@ def _udf_ethereum_rpc_call(to: pd.Series, func_sig: pd.Series,
                                                block_number, endpoint)])
 
 
+# UInt256 quantity -> DECIMAL(38, 0): exact below 10^38, NULL at or above
+# (hex.evm_hex_decode_int(x, 'UInt256') is the oracle). It reads input as
+# hex.py does, an optional 0x/0X prefix and hex digits, and anything else
+# fails the query (conv alone would stop at the first bad digit). Without
+# leading zeros, more than 32 nibbles is >= 2^128 > 10^38; otherwise the
+# value is hi * 2^64 + lo over two 64-bit conv halves, and
+# try_multiply/try_add give NULL once it leaves DECIMAL(38, 0), whatever
+# spark.sql.ansi.enabled says.
+_HEX_DECODE_DEC = """
+CREATE OR REPLACE TEMPORARY FUNCTION evm_hex_decode_dec(x STRING)
+RETURNS DECIMAL(38, 0) RETURN
+CASE WHEN x NOT RLIKE '^(0[xX])?[0-9a-fA-F]*$'
+     THEN raise_error(concat('evm_hex_decode_dec: not hex: ', x))
+     WHEN length(TRIM(LEADING '0' FROM regexp_replace(x, '^0[xX]', ''))) <= 32
+     THEN try_add(
+    try_multiply(
+        CAST(conv(substring(lpad(TRIM(LEADING '0' FROM regexp_replace(x, '^0[xX]', '')),
+                                 32, '0'), 1, 16), 16, 10) AS DECIMAL(20, 0)),
+        18446744073709551616BD),
+    CAST(conv(substring(lpad(TRIM(LEADING '0' FROM regexp_replace(x, '^0[xX]', '')),
+                             32, '0'), 17, 16), 16, 10) AS DECIMAL(20, 0)))
+END"""
+
+
 def register_all(spark: SparkSession) -> None:
     """Register every kernel under its reference name (idempotent).
 
@@ -167,19 +190,21 @@ def register_all(spark: SparkSession) -> None:
         return
     spark.udf.register("evm_hex_decode", _udf_hex_decode)
     spark.udf.register("evm_hex_decode_int", _udf_hex_decode_int)
-    spark.udf.register("evm_hex_decode_dec", _udf_hex_decode_dec)
     spark.udf.register("evm_hex_decode_word", _udf_hex_decode_word)
     spark.udf.register("evm_hex_encode", _udf_hex_encode)
     spark.udf.register("evm_hex_encode_int", _udf_hex_encode_int)
     spark.udf.register("keccak256", _udf_keccak256)
-    spark.udf.register("evm_decode_event", _udf_decode_event)
-    spark.udf.register("evm_decode_call", _udf_decode_call)
+    # nondeterministic so a filter on the decode cannot clone it into a
+    # second Python evaluation (module docstring)
+    spark.udf.register("evm_decode_event", _udf_decode_event.asNondeterministic())
+    spark.udf.register("evm_decode_call", _udf_decode_call.asNondeterministic())
     # an external call is not a pure function (module docstring)
     spark.udf.register("ethereum_rpc", _udf_ethereum_rpc.asNondeterministic())
     spark.udf.register("ethereum_rpc_call",
                        _udf_ethereum_rpc_call.asNondeterministic())
     from .words import register_words
     register_words(spark)
+    spark.sql(_HEX_DECODE_DEC)
     register_json_helpers(spark)
     spark._agn_udfs_registered = True
 

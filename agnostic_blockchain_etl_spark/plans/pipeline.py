@@ -334,20 +334,22 @@ def run_pipeline(executor: Executor, templates: TemplateSet,
 # Retrier (internal/pipeline_retrier/pipeline_retrier.go:16-64)
 # ---------------------------------------------------------------------------
 
-_OOM_MARKERS = ("outofmemory", "memory limit", "memorylimitexceeded",
-                "total memory", "java heap space", "gc overhead")
+_OOM_MARKERS = ("outofmemory", "out of memory", "memory limit",
+                "memorylimitexceeded", "total memory", "java heap space",
+                "gc overhead")
 
 
 def is_memory_error(e: BaseException) -> bool:
     """Memory errors are retried at a smaller batch size. A Spark analysis
     or parse error (``ParseException`` is an ``AnalysisException``) is a
     broken query, never a memory error, even when it names a column like
-    ``totalMemory``."""
+    ``totalMemory``. The markers match the message as written, spaces
+    included, so a field name such as ``totalMemory`` or ``gcOverheadMs``
+    in any other error does not count either."""
     if isinstance(e, AnalysisException):
         return False
-    s = str(e).lower().replace(" ", "")
-    return isinstance(e, MemoryError) or any(
-        m.replace(" ", "") in s for m in _OOM_MARKERS)
+    s = str(e).lower()
+    return isinstance(e, MemoryError) or any(m in s for m in _OOM_MARKERS)
 
 
 def run_with_retry(executor: Executor, templates: TemplateSet,

@@ -3,27 +3,29 @@
 -- tr.action.`from`, :71-91), and the 1-based position-index join into the
 -- sibling receipts array (receipts[transaction_position + 1] →
 -- element_at(receipts, pos + 1), :136-139).
+-- Hex decodes render as Spark built-ins (plans/templates.py), so
+-- ethereum_rpc is the only Python UDF of the plan.
 CREATE OR REPLACE TEMPORARY VIEW buffer_{{.START}}_{{.END}} AS
 WITH deps AS (
     SELECT
         from_json(
             get_json_object(
                 ethereum_rpc('eth_getBlockByNumber',
-                             array(evm_hex_encode_int(id), 'false'),
+                             array({{ hexEncodeInt "id" }}, 'false'),
                              '{{.RPC_ENDPOINT}}#fail-on-error=true&fail-on-null=true'),
                 '$.value'),
             'timestamp STRING, number STRING, hash STRING')       AS b,
         from_json(
             get_json_object(
                 ethereum_rpc('eth_getBlockReceipts',
-                             array(evm_hex_encode_int(id)),
+                             array({{ hexEncodeInt "id" }}),
                              '{{.RPC_ENDPOINT}}#fail-on-error=true&fail-on-null=true'),
                 '$.value'),
             'ARRAY<STRUCT<status: STRING>>')                      AS receipts,
         from_json(
             get_json_object(
                 ethereum_rpc('trace_block',
-                             array(evm_hex_encode_int(id)),
+                             array({{ hexEncodeInt "id" }}),
                              '{{.RPC_ENDPOINT}}#fail-on-error=true&fail-on-null=true'),
                 '$.value'),
             'ARRAY<STRUCT<
@@ -40,26 +42,25 @@ flat AS (
     FROM deps LATERAL VIEW explode(traces) AS tr
 )
 SELECT
-    timestamp_seconds(evm_hex_decode_int(b.timestamp, 'Int64'))   AS timestamp,
-    evm_hex_decode(b.hash)                                        AS block_hash,
-    evm_hex_decode_int(b.number, 'UInt64')                        AS block_number,
-    evm_hex_decode(tr.transactionHash)                            AS transaction_hash,
-    tr.transactionPosition                                        AS transaction_position,
-    CAST(evm_hex_decode_int(
-        element_at(receipts, tr.transactionPosition + 1).status,
-        'UInt8') AS TINYINT)                                      AS transaction_status,
-    tr.subtraces                                                  AS subtraces,
-    tr.traceAddress                                               AS trace_address,
-    tr.type                                                       AS type,
-    tr.action.callType                                            AS call_type,
-    tr.error                                                      AS error,
-    evm_hex_decode(tr.action.`from`)                              AS `from`,
-    evm_hex_decode(tr.action.`to`)                                AS `to`,
-    evm_hex_decode_int(tr.action.gas, 'UInt64')                   AS gas,
-    evm_hex_decode_int(tr.result.gasUsed, 'UInt64')               AS gas_used,
-    evm_hex_decode_dec(tr.action.value)                           AS value,
-    evm_hex_decode(tr.action.input)                               AS input,
-    evm_hex_decode(tr.result.output)                              AS output,
-    date_format(timestamp_seconds(evm_hex_decode_int(b.timestamp, 'Int64')),
-                'yyyyMM')                                         AS month
+    timestamp_seconds({{ hexDecodeInt "b.timestamp" "Int64" }}) AS timestamp,
+    {{ hexDecode "b.hash" }}                                    AS block_hash,
+    {{ hexDecodeInt "b.number" "UInt64" }}                      AS block_number,
+    {{ hexDecode "tr.transactionHash" }}                        AS transaction_hash,
+    tr.transactionPosition                                      AS transaction_position,
+    {{ hexDecodeInt "element_at(receipts, tr.transactionPosition + 1).status"
+                     "UInt8" "TINYINT" }}                       AS transaction_status,
+    tr.subtraces                                                AS subtraces,
+    tr.traceAddress                                             AS trace_address,
+    tr.type                                                     AS type,
+    tr.action.callType                                          AS call_type,
+    tr.error                                                    AS error,
+    {{ hexDecode "tr.action.`from`" }}                          AS `from`,
+    {{ hexDecode "tr.action.`to`" }}                            AS `to`,
+    {{ hexDecodeInt "tr.action.gas" "UInt64" }}                 AS gas,
+    {{ hexDecodeInt "tr.result.gasUsed" "UInt64" }}             AS gas_used,
+    evm_hex_decode_dec(tr.action.value)                         AS value,
+    {{ hexDecode "tr.action.input" }}                           AS input,
+    {{ hexDecode "tr.result.output" }}                          AS output,
+    date_format(timestamp_seconds({{ hexDecodeInt "b.timestamp" "Int64" }}),
+                'yyyyMM')                                       AS month
 FROM flat

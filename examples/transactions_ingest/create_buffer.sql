@@ -3,13 +3,15 @@
 -- ``ARRAY JOIN block.transactions AS tx, receipts AS r`` (ClickHouse zips
 -- equal-length arrays by index). Spark mapping (SURVEY.md §2.4):
 -- ``posexplode(arrays_zip(transactions, receipts))`` — NOT a cross join.
+-- Hex decodes render as Spark built-ins (plans/templates.py), so
+-- ethereum_rpc is the only Python UDF of the plan.
 CREATE OR REPLACE TEMPORARY VIEW buffer_{{.START}}_{{.END}} AS
 WITH deps AS (
     SELECT
         from_json(
             get_json_object(
                 ethereum_rpc('eth_getBlockByNumber',
-                             array(evm_hex_encode_int(id), 'true'),
+                             array({{ hexEncodeInt "id" }}, 'true'),
                              '{{.RPC_ENDPOINT}}#fail-on-error=true&fail-on-null=true'),
                 '$.value'),
             'timestamp STRING, number STRING, hash STRING,
@@ -20,7 +22,7 @@ WITH deps AS (
         from_json(
             get_json_object(
                 ethereum_rpc('eth_getBlockReceipts',
-                             array(evm_hex_encode_int(id)),
+                             array({{ hexEncodeInt "id" }}),
                              '{{.RPC_ENDPOINT}}#fail-on-error=true&fail-on-null=true'),
                 '$.value'),
             'ARRAY<STRUCT<transactionHash: STRING, transactionIndex: STRING,
@@ -34,22 +36,22 @@ zipped AS (
     LATERAL VIEW posexplode(arrays_zip(b.transactions, receipts)) AS pos, z
 )
 SELECT
-    timestamp_seconds(evm_hex_decode_int(b.timestamp, 'Int64'))  AS timestamp,
-    evm_hex_decode(b.hash)                                       AS block_hash,
-    evm_hex_decode_int(b.number, 'UInt64')                       AS block_number,
-    evm_hex_decode(tx.hash)                                      AS hash,
-    CAST(evm_hex_decode_int(tx.transactionIndex, 'UInt32') AS INT) AS transaction_index,
-    evm_hex_decode(tx.`from`)                                    AS `from`,
-    evm_hex_decode(tx.`to`)                                      AS `to`,
-    evm_hex_decode_dec(tx.value)                                 AS value,
-    evm_hex_decode_int(tx.gas, 'UInt64')                         AS gas,
-    evm_hex_decode_int(r.gasUsed, 'UInt64')                      AS gas_used,
-    evm_hex_decode_int(r.cumulativeGasUsed, 'UInt64')            AS cumulative_gas_used,
-    evm_hex_decode_dec(r.effectiveGasPrice)                      AS effective_gas_price,
-    evm_hex_decode_int(tx.nonce, 'UInt64')                       AS nonce,
-    evm_hex_decode(tx.input)                                     AS input,
-    CAST(evm_hex_decode_int(tx.type, 'UInt8') AS INT)            AS type,
-    CAST(evm_hex_decode_int(r.status, 'UInt8') AS TINYINT)       AS status,
-    date_format(timestamp_seconds(evm_hex_decode_int(b.timestamp, 'Int64')),
-                'yyyyMM')                                        AS month
+    timestamp_seconds({{ hexDecodeInt "b.timestamp" "Int64" }}) AS timestamp,
+    {{ hexDecode "b.hash" }}                                    AS block_hash,
+    {{ hexDecodeInt "b.number" "UInt64" }}                      AS block_number,
+    {{ hexDecode "tx.hash" }}                                   AS hash,
+    {{ hexDecodeInt "tx.transactionIndex" "UInt32" "INT" }}     AS transaction_index,
+    {{ hexDecode "tx.`from`" }}                                 AS `from`,
+    {{ hexDecode "tx.`to`" }}                                   AS `to`,
+    evm_hex_decode_dec(tx.value)                                AS value,
+    {{ hexDecodeInt "tx.gas" "UInt64" }}                        AS gas,
+    {{ hexDecodeInt "r.gasUsed" "UInt64" }}                     AS gas_used,
+    {{ hexDecodeInt "r.cumulativeGasUsed" "UInt64" }}           AS cumulative_gas_used,
+    evm_hex_decode_dec(r.effectiveGasPrice)                     AS effective_gas_price,
+    {{ hexDecodeInt "tx.nonce" "UInt64" }}                      AS nonce,
+    {{ hexDecode "tx.input" }}                                  AS input,
+    {{ hexDecodeInt "tx.type" "UInt8" "INT" }}                  AS type,
+    {{ hexDecodeInt "r.status" "UInt8" "TINYINT" }}             AS status,
+    date_format(timestamp_seconds({{ hexDecodeInt "b.timestamp" "Int64" }}),
+                'yyyyMM')                                       AS month
 FROM zipped

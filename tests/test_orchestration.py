@@ -349,6 +349,11 @@ class TestMemoryErrorClassifier:
     def test_analysis_error_is_not_memory_error(self):
         assert not is_memory_error(AnalysisException(UNRESOLVED_TOTAL_MEMORY))
 
+    def test_field_names_are_not_memory_errors(self):
+        assert not is_memory_error(KeyError("totalMemory"))
+        assert not is_memory_error(RuntimeError("gcOverheadMs exceeded"))
+        assert is_memory_error(RuntimeError("Container ran out of memory"))
+
 
 UNRESOLVED_TOTAL_MEMORY = (
     "[UNRESOLVED_COLUMN.WITH_SUGGESTION] A column with name `totalMemory` "
