@@ -2,7 +2,8 @@
 
 Pure-Python kernels + Spark registration:
 
-- ``hex``     — evm_hex_decode / evm_hex_decode_int / evm_hex_encode(_int)
+- ``hexsql``  — evm_hex_decode(_int/_word/_dec) / evm_hex_encode(_int) as
+  Spark SQL forms; ``hex`` is their Python test oracle
 - ``keccak``  — keccak256 (Ethereum padding variant)
 - ``abi``     — signature parsing, ABI encode/decode, evm_decode_event/call
 - ``rpc``     — ethereum_rpc / ethereum_rpc_call with fragment options
@@ -10,15 +11,11 @@ Pure-Python kernels + Spark registration:
 """
 
 from .abi import evm_decode_call, evm_decode_event
-from .hex import (evm_hex_decode, evm_hex_decode_int, evm_hex_encode,
-                  evm_hex_encode_int)
 from .keccak import keccak256, keccak256_hex
 from .registry import register_all
 from .rpc import ethereum_rpc, ethereum_rpc_call
 
 __all__ = [
-    "evm_decode_call", "evm_decode_event", "evm_hex_decode",
-    "evm_hex_decode_int", "evm_hex_encode", "evm_hex_encode_int",
-    "keccak256", "keccak256_hex", "register_all",
-    "ethereum_rpc", "ethereum_rpc_call",
+    "evm_decode_call", "evm_decode_event", "keccak256", "keccak256_hex",
+    "register_all", "ethereum_rpc", "ethereum_rpc_call",
 ]

@@ -15,6 +15,8 @@ Semantics (observed from template usage):
   from an absent field and must stay distinct through the decode.
 - ``evm_hex_decode_int('0x…', 'UInt64') -> int`` of the named width; ``0x``
   alone decodes to 0; odd-length nibble strings are left-padded.
+- Both decodes raise ``ValueError`` on anything but an optional ``0x``
+  prefix and hex digits (``int``/``bytes.fromhex`` accept ``-``, `` ``, ``_``).
 - ``evm_hex_encode(bytes) -> '0x…'`` lowercase.
 - ``evm_hex_encode_int(n) -> '0x…'`` minimal-length (JSON-RPC quantity
   encoding: no leading zeros, ``0 -> '0x0'``), used to build
@@ -22,6 +24,8 @@ Semantics (observed from template usage):
 """
 
 from __future__ import annotations
+
+import string
 
 _INT_TYPE_BITS = {
     "UInt8": 8, "UInt16": 16, "UInt32": 32, "UInt64": 64,
@@ -31,15 +35,19 @@ _INT_TYPE_BITS = {
 }
 
 
-def _strip_0x(s: str) -> str:
-    return s[2:] if s.startswith(("0x", "0X")) else s
+def _digits(s: str) -> str:
+    """The hex digits of ``s`` after an optional ``0x``/``0X`` prefix."""
+    h = s[2:] if s.startswith(("0x", "0X")) else s
+    if not all(c in string.hexdigits for c in h):
+        raise ValueError(f"not hex: {s!r}")
+    return h
 
 
 def evm_hex_decode(s: str | None) -> bytes | None:
     """``'0x…'`` hex string → bytes (None-safe; odd length left-padded)."""
     if s is None:
         return None
-    h = _strip_0x(s)
+    h = _digits(s)
     if h == "":
         return b""
     if len(h) % 2:
@@ -58,7 +66,7 @@ def evm_hex_decode_int(s: str | None, int_type: str = "UInt64") -> int | None:
     bits = _INT_TYPE_BITS.get(int_type)
     if bits is None:
         raise ValueError(f"unknown integer type {int_type!r}")
-    h = _strip_0x(s)
+    h = _digits(s)
     value = int(h, 16) if h else 0
     if value >= (1 << bits):
         raise OverflowError(f"{s!r} does not fit in {int_type}")

@@ -7,18 +7,15 @@ reference's SQL (hex/keccak/ABI-decode expressions) runs near-verbatim via
 ``spark.sql``.
 
 Design notes (scale): every Python UDF in a plan costs an Arrow round
-trip to a Python worker, so the ingest templates render the ≤64-bit hex
-kernels as Spark built-ins (``unhex``, ``conv``, ``hex``; SURVEY.md
-§2.7) through the template functions of ``plans/templates.py``, and
-``evm_hex_decode_dec`` is a SQL-defined function, like the ``agn_json_*``
-helpers: both inline into whole-stage codegen. The other hex kernels and
-``keccak256`` stay registered as **pandas UDFs** under the reference's
-names, for user SQL, ``operators/extended.py`` and Spark Connect clients
-(values move in Arrow record batches, not pickled rows); ``hex.py`` is
-the oracle both forms are tested against. The decode UDFs are pandas
-UDFs too (CPU-bound, benefit from batch amortization). The RPC functions
-are pandas UDFs as well: one transport is resolved per Arrow batch, so
-SQL-verbatim pipelines get connection/retry-state reuse.
+trip to a Python worker, so the ``evm_hex_*`` kernels are SQL-defined
+functions built from the forms of ``functions/hexsql.py``, like the
+``agn_json_*`` helpers: they inline into whole-stage codegen (but not
+into a lambda, where they fail analysis as Python UDFs do). ``keccak256``
+and the decode UDFs are **pandas UDFs** (Arrow record batches, not
+pickled rows; decoding is CPU-bound and benefits from batch
+amortization). The RPC functions are pandas UDFs as well: one transport
+is resolved per Arrow batch, so SQL-verbatim pipelines get
+connection/retry-state reuse.
 
 The RPC and decode UDFs are registered **nondeterministic**: a
 deterministic UDF is a pure function to the optimizer, which may
@@ -43,52 +40,14 @@ import json
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType, LongType, StringType
+from pyspark.sql.types import BinaryType, StringType
 
-from . import abi, hex as hexmod, keccak, rpc
-
+from . import abi, hexsql, keccak, rpc
 
 
 # ---------------------------------------------------------------------------
 # pandas UDF kernels
 # ---------------------------------------------------------------------------
-
-@pandas_udf(BinaryType())
-def _udf_hex_decode(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: hexmod.evm_hex_decode(v) if v is not None else None)
-
-
-@pandas_udf(LongType())
-def _udf_hex_decode_int(s: pd.Series, t: pd.Series) -> pd.Series:
-    # zip value+type rows together — a separate iterator would desync on
-    # null values (null rows must still consume their type argument)
-    return pd.Series([
-        hexmod.evm_hex_decode_int(v, ty) if v is not None else None
-        for v, ty in zip(s, t)])
-
-
-@pandas_udf(BinaryType())
-def _udf_hex_decode_word(s: pd.Series) -> pd.Series:
-    """0x-hex quantity → canonical 32-byte big-endian word (UInt256 exact)."""
-
-    def conv(v):
-        if v is None:
-            return None
-        n = hexmod.evm_hex_decode_int(v, "UInt256")
-        return n.to_bytes(32, "big")
-
-    return s.map(conv)
-
-
-@pandas_udf(StringType())
-def _udf_hex_encode(b: pd.Series) -> pd.Series:
-    return b.map(lambda v: hexmod.evm_hex_encode(bytes(v)) if v is not None else None)
-
-
-@pandas_udf(StringType())
-def _udf_hex_encode_int(n: pd.Series) -> pd.Series:
-    return n.map(lambda v: hexmod.evm_hex_encode_int(int(v)) if v is not None and not pd.isna(v) else None)
-
 
 @pandas_udf(BinaryType())
 def _udf_keccak256(s: pd.Series) -> pd.Series:
@@ -155,30 +114,6 @@ def _udf_ethereum_rpc_call(to: pd.Series, func_sig: pd.Series,
                                                block_number, endpoint)])
 
 
-# UInt256 quantity -> DECIMAL(38, 0): exact below 10^38, NULL at or above
-# (hex.evm_hex_decode_int(x, 'UInt256') is the oracle). It reads input as
-# hex.py does, an optional 0x/0X prefix and hex digits, and anything else
-# fails the query (conv alone would stop at the first bad digit). Without
-# leading zeros, more than 32 nibbles is >= 2^128 > 10^38; otherwise the
-# value is hi * 2^64 + lo over two 64-bit conv halves, and
-# try_multiply/try_add give NULL once it leaves DECIMAL(38, 0), whatever
-# spark.sql.ansi.enabled says.
-_HEX_DECODE_DEC = """
-CREATE OR REPLACE TEMPORARY FUNCTION evm_hex_decode_dec(x STRING)
-RETURNS DECIMAL(38, 0) RETURN
-CASE WHEN x NOT RLIKE '^(0[xX])?[0-9a-fA-F]*$'
-     THEN raise_error(concat('evm_hex_decode_dec: not hex: ', x))
-     WHEN length(TRIM(LEADING '0' FROM regexp_replace(x, '^0[xX]', ''))) <= 32
-     THEN try_add(
-    try_multiply(
-        CAST(conv(substring(lpad(TRIM(LEADING '0' FROM regexp_replace(x, '^0[xX]', '')),
-                                 32, '0'), 1, 16), 16, 10) AS DECIMAL(20, 0)),
-        18446744073709551616BD),
-    CAST(conv(substring(lpad(TRIM(LEADING '0' FROM regexp_replace(x, '^0[xX]', '')),
-                             32, '0'), 17, 16), 16, 10) AS DECIMAL(20, 0)))
-END"""
-
-
 def register_all(spark: SparkSession) -> None:
     """Register every kernel under its reference name (idempotent).
 
@@ -188,11 +123,9 @@ def register_all(spark: SparkSession) -> None:
     registered/variant flags."""
     if getattr(spark, "_agn_udfs_registered", False):
         return
-    spark.udf.register("evm_hex_decode", _udf_hex_decode)
-    spark.udf.register("evm_hex_decode_int", _udf_hex_decode_int)
-    spark.udf.register("evm_hex_decode_word", _udf_hex_decode_word)
-    spark.udf.register("evm_hex_encode", _udf_hex_encode)
-    spark.udf.register("evm_hex_encode_int", _udf_hex_encode_int)
+    for signature, returns, body in hexsql.FUNCTIONS:
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {signature} "
+                  f"RETURNS {returns} RETURN {body}")
     spark.udf.register("keccak256", _udf_keccak256)
     # nondeterministic so a filter on the decode cannot clone it into a
     # second Python evaluation (module docstring)
@@ -204,7 +137,6 @@ def register_all(spark: SparkSession) -> None:
                        _udf_ethereum_rpc_call.asNondeterministic())
     from .words import register_words
     register_words(spark)
-    spark.sql(_HEX_DECODE_DEC)
     register_json_helpers(spark)
     spark._agn_udfs_registered = True
 

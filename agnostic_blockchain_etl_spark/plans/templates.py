@@ -19,26 +19,17 @@ with Go's ``missingkey=default`` behavior: a missing variable renders as
 On top of those, the engine's own templates call three functions, in Go's
 function-call syntax (``{{ hexDecode "b.hash" }}``; Go registers such
 functions through a ``FuncMap``). They expand at render time to the Spark
-built-in form of the reference's ≤64-bit hex UDFs (SURVEY.md §2.7), so a
-plan decodes hex in whole-stage codegen instead of a Python worker, and
-the form is written once, here:
+built-in form of the reference's ≤64-bit hex kernels (SURVEY.md §2.7),
+defined once in ``functions/hexsql.py``, so a plan decodes hex in
+whole-stage codegen instead of a Python worker:
 
 - ``hexDecode "x"`` — ``evm_hex_decode(x)``;
 - ``hexDecodeInt "x" "UInt64" ["BIGINT"]`` — ``evm_hex_decode_int(x, T)``
   as a Spark integer type (``BIGINT`` by default);
 - ``hexEncodeInt "id"`` — ``evm_hex_encode_int(id)``.
 
-The decodes read input the way ``functions/hex.py`` does (an optional
-``0x``/``0X`` prefix, then hex digits; NULL stays NULL) and are as strict,
-whatever ``spark.sql.ansi.enabled`` says: malformed input, and a quantity
-past ``T`` or the Spark type, fail the query with
-``CONVERSION_INVALID_INPUT`` from ``to_binary(…, 'hex')``. ``unhex`` would
-give NULL there and ``conv`` stops at the first bad digit. The checks
-are regular expressions inside the value expression rather than a
-``CASE … raise_error`` per field: a buffer view is analysed twice per
-batch, and the conditional form added more than twice as much analysis
-time. Each form names its argument once, so the argument may be any
-expression.
+The registered SQL functions of those names are not called: Spark
+re-inlines a SQL function at each call site, which slowed analysis.
 """
 
 from __future__ import annotations
@@ -46,56 +37,19 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+from ..functions.hexsql import hex_decode, hex_decode_int, hex_encode
+
 _ACTION_RE = re.compile(r"\{\{(.*?)\}\}", re.S)
 _CALL_RE = re.compile(r'^([A-Za-z]\w*)((?:\s+"[^"]*")*)$')
 _NO_VALUE = "<no value>"
-
-# non-negative bits of the reference and Spark integer types the
-# templates decode to
-_REF_BITS = {"UInt8": 8, "UInt32": 32, "UInt64": 64, "Int64": 63}
-_SQL_BITS = {"TINYINT": 7, "INT": 31, "BIGINT": 63}
 
 
 class TemplateError(ValueError):
     pass
 
 
-def _quantity_re(bits: int) -> str:
-    """A regex for the hex digits of the quantities below ``2**bits``:
-    after the leading zeros, at most ``ceil(bits / 4)`` nibbles, and when
-    ``bits`` is not a multiple of 4, a first nibble below
-    ``2**(bits % 4)``."""
-    n = -(-bits // 4)
-    top = bits - 4 * (n - 1)
-    if top == 4:
-        return f"0*[0-9a-fA-F]{{0,{n}}}"
-    return f"0*[0-{2 ** top - 1}]?[0-9a-fA-F]{{0,{n - 1}}}"
-
-
-def hex_decode(x: str) -> str:
-    return f"to_binary(regexp_replace({x}, '^0[xX]', ''), 'hex')"
-
-
-def hex_decode_int(x: str, ref_type: str, sql_type: str = "BIGINT") -> str:
-    if ref_type not in _REF_BITS or sql_type not in _SQL_BITS:
-        raise TemplateError(
-            f"hexDecodeInt: unsupported types {ref_type!r}, {sql_type!r}; "
-            f"have {sorted(_REF_BITS)} and {sorted(_SQL_BITS)}")
-    digits = _quantity_re(min(_REF_BITS[ref_type], _SQL_BITS[sql_type]))
-    # an in-range quantity becomes '0' + its digits ('0x' -> 0); anything
-    # else keeps the '#' mark, which to_binary rejects. The to_binary/hex
-    # round trip only makes that check part of the value.
-    checked = (f"regexp_replace(concat('#', {x}), "
-               f"'^#(?:0[xX])?({digits})$', '0$1')")
-    return f"CAST(conv(hex(to_binary({checked}, 'hex')), 16, 10) AS {sql_type})"
-
-
-def hex_encode_int(x: str) -> str:
-    return f"concat('0x', lower(hex({x})))"
-
-
 _FUNCS = {"hexDecode": hex_decode, "hexDecodeInt": hex_decode_int,
-          "hexEncodeInt": hex_encode_int}
+          "hexEncodeInt": hex_encode}
 
 
 def _eval_call(name: str, args: list[str]) -> str:
@@ -104,7 +58,7 @@ def _eval_call(name: str, args: list[str]) -> str:
         raise TemplateError(f"unknown template function {name!r}")
     try:
         return fn(*args)
-    except TypeError as ex:
+    except (TypeError, ValueError) as ex:
         raise TemplateError(f"{name}: {ex}") from ex
 
 

@@ -1,20 +1,22 @@
-"""The ingest templates decode hex with Spark built-ins, not Python UDFs.
+"""Hex is decoded with Spark built-ins, not Python UDFs.
 
-The reference's ≤64-bit hex UDFs render as built-ins through the template
-functions of ``plans/templates.py`` (SURVEY.md §2.7), and
-``evm_hex_decode_dec`` is a SQL-defined function, so ``ethereum_rpc`` is
-the only Python evaluation in an ingest buffer or tip plan. Two checks:
+The reference's hex kernels have one SQL definition each, the forms of
+``functions/hexsql.py`` (SURVEY.md §2.7): the ingest templates render
+them inline through the template functions of ``plans/templates.py``,
+and ``register_all`` creates the SQL-defined functions of the reference
+names from them, so ``ethereum_rpc`` is the only Python evaluation in an
+ingest buffer or tip plan. Two checks:
 
 - plan shape: the executed plan of every ``examples/*_ingest``
   ``create_buffer.sql`` and ``tip.sql`` evaluates no Python UDF but the
-  RPC ones, each RPC call site once, and each ABI-decode buffer decodes
-  in exactly one Python node (a filter on the decode once cloned it into
-  a second one);
-- differential: each template function's expansion and the SQL
-  ``evm_hex_decode_dec`` agree with the Python kernels in
-  ``functions/hex.py``, which stay as the oracle: the same values, and a
-  failed query where ``hex.py`` raises, whatever ``spark.sql.ansi.enabled``
-  says."""
+  RPC ones, each RPC call site once, each ABI-decode buffer decodes in
+  exactly one Python node (a filter on the decode once cloned it into a
+  second one), and a query calling every registered hex name evaluates
+  none;
+- differential: each form and each registered name agree with the Python
+  kernels in ``functions/hex.py``, which stay as the oracle: the same
+  values, and a failed query where ``hex.py`` raises, whatever
+  ``spark.sql.ansi.enabled`` says."""
 
 import glob
 import os
@@ -25,15 +27,15 @@ import uuid
 from decimal import Decimal
 
 import pytest
-from pyspark.errors import (IllegalArgumentException, PythonException,
-                            SparkRuntimeException)
+from pyspark.errors import IllegalArgumentException, SparkRuntimeException
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from agnostic_blockchain_etl_spark.functions import hex as hexmod  # noqa: E402
+from agnostic_blockchain_etl_spark.functions.hexsql import (  # noqa: E402
+    hex_decode, hex_decode_int, hex_decode_word, hex_encode)
 from agnostic_blockchain_etl_spark.plans.templates import (  # noqa: E402
-    TemplateError, TemplateSet, hex_decode, hex_decode_int, hex_encode_int,
-    render_string)
+    TemplateError, TemplateSet, render_string)
 
 EXAMPLES = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "examples")
@@ -48,8 +50,14 @@ VARS = {"START": 0, "END": 9, "RPC_ENDPOINT": "mock://plans",
 INT_FORMS = {("Int64", "BIGINT"): 2 ** 63 - 1, ("UInt64", "BIGINT"): 2 ** 63 - 1,
              ("UInt32", "INT"): 2 ** 31 - 1, ("UInt8", "INT"): 255,
              ("UInt8", "TINYINT"): 127}
-# input hex.py rejects too
-MALFORMED = ["0x12zz", "0xg", "x0", "#1"]
+# input hex.py rejects too; int(h, 16) alone reads the middle four and
+# bytes.fromhex the last
+MALFORMED = ["0x12zz", "0xg", "x0", "#1",
+             "0x-1", "0x 1", "0x1_0", "0x0x1", "0x12 34"]
+# the types the registered evm_hex_decode_int reads, with the largest
+# value each admits as a BIGINT
+REGISTERED_TYPES = {"UInt8": 255, "UInt32": 2 ** 32 - 1,
+                    "UInt64": 2 ** 63 - 1, "Int64": 2 ** 63 - 1}
 
 
 @pytest.fixture(scope="module")
@@ -152,11 +160,25 @@ class TestPlanShape:
                        "evm_hex_encode_int", "unhex", "conv", "hex"):
                 assert not re.search(rf"\b{fn}\(", code), (example, name, fn)
 
+    def test_registered_hex_names_evaluate_no_python(self, spark):
+        df = spark.createDataFrame([("0x2a", "UInt8")], "x STRING, t STRING")
+        df.createOrReplaceTempView("hex_names")
+        plan = spark.sql("""
+            SELECT evm_hex_decode(x) AS b, evm_hex_decode_int(x, t) AS n,
+                   evm_hex_decode_word(x) AS w,
+                   evm_hex_encode(evm_hex_decode(x)) AS s,
+                   evm_hex_encode_int(length(x)) AS q
+            FROM hex_names""")
+        assert _evals_of(plan) == []
+        assert plan.collect()[0].asDict() == {
+            "b": b"*", "n": 42, "w": (42).to_bytes(32, "big"), "s": "0x2a",
+            "q": "0x4"}
+
 
 class TestTemplateFunctions:
     def test_render_expands_the_forms(self):
         assert render_string('{{ hexDecode "b.hash" }}', {}) == hex_decode("b.hash")
-        assert render_string('{{ hexEncodeInt "id" }}', {}) == hex_encode_int("id")
+        assert render_string('{{ hexEncodeInt "id" }}', {}) == hex_encode("id")
         assert render_string('{{ hexDecodeInt "n"\n    "UInt8" "TINYINT" }}', {}) \
             == hex_decode_int("n", "UInt8", "TINYINT")
         assert render_string('{{ hexDecodeInt "n" "UInt64" }}', {}) \
@@ -226,11 +248,13 @@ class TestDifferential:
         values = self.EDGES + [hex(rng.getrandbits(rng.randint(1, 63)))
                                for _ in range(200)]
         rows = _rows(spark, {"b": hex_decode("x"),
-                             "n": hex_decode_int("x", "UInt64")},
+                             "n": hex_decode_int("x", "UInt64"),
+                             "rb": "evm_hex_decode(x)",
+                             "rn": "evm_hex_decode_int(x, 'UInt64')"},
                      values, "x STRING")
         for r, v in zip(rows, values):
-            assert r["b"] == hexmod.evm_hex_decode(v), v
-            assert r["n"] == hexmod.evm_hex_decode_int(v, "UInt64"), v
+            assert r["b"] == r["rb"] == hexmod.evm_hex_decode(v), v
+            assert r["n"] == r["rn"] == hexmod.evm_hex_decode_int(v, "UInt64"), v
         small = [v for v in values if v is None or
                  hexmod.evm_hex_decode_int(v, "UInt64") <= 127]
         for form in INT_FORMS:
@@ -243,20 +267,82 @@ class TestDifferential:
         rng = random.Random(11)
         values = [None, 0, 1, 15, 16, 255, 2 ** 63 - 1] + \
             [rng.getrandbits(rng.randint(1, 63)) for _ in range(200)]
-        rows = _rows(spark, {"s": hex_encode_int("x")}, values, "x BIGINT")
+        rows = _rows(spark, {"s": hex_encode("x")}, values, "x BIGINT")
         for r, v in zip(rows, values):
             assert r["s"] == hexmod.evm_hex_encode_int(v), v
 
     def test_uint64_at_2_63_fails_in_both_forms(self, spark, ansi):
         """The sink column is BIGINT: 2^63 fits UInt64 but not the column,
-        and fails in SQL whatever the conf, as it does in the pandas UDF
-        (Arrow rejects it)."""
+        and fails the query in the form and the registered name, whatever
+        the conf."""
         x = hex(2 ** 63)
-        with pytest.raises(IllegalArgumentException,
-                           match="CONVERSION_INVALID_INPUT"):
-            _one(spark, hex_decode_int("x", "UInt64"), x)
-        with pytest.raises(PythonException, match="overflow"):
-            _one(spark, "evm_hex_decode_int(x, 'UInt64')", x)
+        for expr in (hex_decode_int("x", "UInt64"),
+                     "evm_hex_decode_int(x, 'UInt64')"):
+            with pytest.raises(IllegalArgumentException,
+                               match="CONVERSION_INVALID_INPUT"):
+                _one(spark, expr, x)
+
+    def test_registered_decode_int_and_word(self, spark, ansi):
+        """evm_hex_decode_int with a type per row, and evm_hex_decode_word,
+        exact over the whole UInt256 range."""
+        rng = random.Random(19)
+        types = list(REGISTERED_TYPES)
+        rows = [(None, t) for t in types] + [("0x", t) for t in types] + \
+            [(hex(b), t) for t, b in REGISTERED_TYPES.items()]
+        for _ in range(300):
+            t = rng.choice(types)
+            text = hex(rng.randint(0, REGISTERED_TYPES[t]))
+            rows.append((rng.choice((text, text.upper(), text[2:],
+                                     "0x000" + text[2:])), t))
+        got = _rows(spark, {"n": "evm_hex_decode_int(x.v, x.t)"}, rows,
+                    "x STRUCT<v: STRING, t: STRING>")
+        for r, (v, t) in zip(got, rows):
+            assert r["n"] == hexmod.evm_hex_decode_int(v, t), (v, t)
+
+        words = [None, "0x", "0x0", "0XFF", "abc", "0x" + "0" * 70 + "2a",
+                 hex(2 ** 256 - 1)] + \
+            [hex(n) for n in _words(random.Random(23), 300)]
+        got = _rows(spark, {"w": "evm_hex_decode_word(x)",
+                            "f": hex_decode_word("x")}, words, "x STRING")
+        for r, v in zip(got, words):
+            want = None if v is None else \
+                hexmod.evm_hex_decode_int(v, "UInt256").to_bytes(32, "big")
+            assert r["w"] == r["f"] == want, v
+
+    @pytest.mark.parametrize("t", ["Int8", "UInt256", "uint64"])
+    def test_registered_decode_int_fails_on_other_types(self, spark, ansi, t):
+        """The SQL name reads only REGISTERED_TYPES: hex.py reads Int8 as
+        a signed two's complement (-1 below) and UInt256 past BIGINT."""
+        with pytest.raises(SparkRuntimeException,
+                           match=f"unsupported type {t}"):
+            _one(spark, f"evm_hex_decode_int(x, '{t}')", "0xff")
+        with pytest.raises(SparkRuntimeException,
+                           match=f"unsupported type {t}"):
+            _rows(spark, {"n": "evm_hex_decode_int(x.v, x.t)"},
+                  [("0x1", "UInt64"), ("0x1", t)],
+                  "x STRUCT<v: STRING, t: STRING>")
+
+    def test_registered_encodes(self, spark, ansi):
+        rng = random.Random(29)
+        blobs = [None, b"", b"\x00", b"\x00\xff", bytes(32)] + \
+            [rng.randbytes(rng.randint(0, 40)) for _ in range(200)]
+        got = _rows(spark, {"s": "evm_hex_encode(x)"}, blobs, "x BINARY")
+        for r, b in zip(got, blobs):
+            assert r["s"] == hexmod.evm_hex_encode(b), b
+        values = [None, 0, 1, 15, 16, 255, 2 ** 63 - 1] + \
+            [rng.getrandbits(rng.randint(1, 63)) for _ in range(200)]
+        got = _rows(spark, {"s": "evm_hex_encode_int(x)"}, values, "x BIGINT")
+        for r, v in zip(got, values):
+            assert r["s"] == hexmod.evm_hex_encode_int(v), v
+
+    @pytest.mark.parametrize("n", [-1, -2 ** 63])
+    def test_registered_encode_int_of_negative_fails(self, spark, ansi, n):
+        """Spark's hex() of a negative BIGINT is its two's complement
+        ('0xffffffffffffffff' for -1); hex.py raises."""
+        with pytest.raises(SparkRuntimeException, match="negative quantity"):
+            _rows(spark, {"s": "evm_hex_encode_int(x)"}, [1, n], "x BIGINT")
+        with pytest.raises(ValueError):
+            hexmod.evm_hex_encode_int(n)
 
     @pytest.mark.parametrize("form,bound", list(INT_FORMS.items()))
     def test_int_forms_fail_past_their_bound(self, spark, ansi, form, bound):
@@ -270,7 +356,10 @@ class TestDifferential:
         """unhex gives NULL on such input and conv stops at the first bad
         digit ('0x12zz' would read 18): the forms fail the query, as
         hex.py raises."""
-        for expr in (hex_decode("x"), hex_decode_int("x", "UInt64")):
+        for expr in (hex_decode("x"), hex_decode_int("x", "UInt64"),
+                     hex_decode_word("x"), "evm_hex_decode(x)",
+                     "evm_hex_decode_int(x, 'UInt64')",
+                     "evm_hex_decode_word(x)"):
             with pytest.raises(IllegalArgumentException,
                                match="CONVERSION_INVALID_INPUT"):
                 _one(spark, expr, x)
