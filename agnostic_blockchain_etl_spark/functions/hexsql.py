@@ -70,14 +70,17 @@ def hex_encode(x: str) -> str:
     return f"concat('0x', lower(hex({x})))"
 
 
-# UInt256 quantity -> DECIMAL(38, 0), exact below 10^38, NULL at or above.
-# Without leading zeros, more than 32 nibbles is >= 2^128 > 10^38;
-# otherwise the value is hi * 2^64 + lo over two 64-bit conv halves, and
-# try_multiply/try_add give NULL once it leaves DECIMAL(38, 0).
+# UInt256 quantity -> DECIMAL(38, 0), exact below 10^38, NULL at or above,
+# and a failed query past UInt256, where hex.py raises. Without leading
+# zeros, more than 64 nibbles is >= 2^256 and more than 32 is >= 2^128 >
+# 10^38; otherwise the value is hi * 2^64 + lo over two 64-bit conv
+# halves, and try_multiply/try_add give NULL once it leaves DECIMAL(38, 0).
 _DIGITS = f"TRIM(LEADING '0' FROM {_strip_0x('x')})"
 _DECODE_DEC = f"""
 CASE WHEN x NOT RLIKE '^(0[xX])?[0-9a-fA-F]*$'
      THEN raise_error(concat('evm_hex_decode_dec: not hex: ', x))
+     WHEN length({_DIGITS}) > 64
+     THEN raise_error(concat('evm_hex_decode_dec: does not fit in UInt256: ', x))
      WHEN length({_DIGITS}) <= 32
      THEN try_add(
     try_multiply(

@@ -8,9 +8,11 @@ reference's SQL (hex/keccak/ABI-decode expressions) runs near-verbatim via
 
 Design notes (scale): every Python UDF in a plan costs an Arrow round
 trip to a Python worker, so the ``evm_hex_*`` kernels are SQL-defined
-functions built from the forms of ``functions/hexsql.py``, like the
-``agn_json_*`` helpers: they inline into whole-stage codegen (but not
-into a lambda, where they fail analysis as Python UDFs do). ``keccak256``
+functions built from the forms of ``functions/hexsql.py``: they inline
+into whole-stage codegen (but not into a lambda, where they fail
+analysis as Python UDFs do). Decoded ABI payloads need no helper: the
+decode templates store them as VARIANT with the built-ins
+``try_parse_json`` and ``CAST(… AS STRING)``. ``keccak256``
 and the decode UDFs are **pandas UDFs** (Arrow record batches, not
 pickled rows; decoding is CPU-bound and benefits from batch
 amortization). The RPC functions are pandas UDFs as well: one transport
@@ -117,10 +119,9 @@ def _udf_ethereum_rpc_call(to: pd.Series, func_sig: pd.Series,
 def register_all(spark: SparkSession) -> None:
     """Register every kernel under its reference name (idempotent).
 
-    Session-scoped state lives as attributes ON the session object, not
-    in module dicts keyed by ``id(spark)``: a stopped session's id can be
-    reused by a new object, which would silently inherit stale
-    registered/variant flags."""
+    The registered flag lives as an attribute ON the session object, not
+    in a module dict keyed by ``id(spark)``: a stopped session's id can be
+    reused by a new object, which would silently inherit a stale flag."""
     if getattr(spark, "_agn_udfs_registered", False):
         return
     for signature, returns, body in hexsql.FUNCTIONS:
@@ -137,45 +138,4 @@ def register_all(spark: SparkSession) -> None:
                        _udf_ethereum_rpc_call.asNondeterministic())
     from .words import register_words
     register_words(spark)
-    register_json_helpers(spark)
     spark._agn_udfs_registered = True
-
-
-def register_json_helpers(spark: SparkSession,
-                          use_variant: bool | None = None) -> None:
-    """(Re-)register the dynamic-JSON SQL helpers the decode templates
-    use, choosing the storage form for decoded payload columns:
-
-    - ``agn_json_pack(s)`` — JSON text → the storage value (VARIANT via
-      try_parse_json when the session supports it, else the string);
-    - ``agn_json_get(v, path)`` — subpath read as STRING (variant_get
-      with pushdown, else get_json_object re-parse);
-    - ``agn_json_str(v)`` — canonical JSON text of the stored value (the
-      reference's ``toJSONString(Dynamic)``, decoded_logs_to_daily).
-
-    SQL-defined functions, so they inline into whole-stage codegen —
-    no Python boundary. Pass ``use_variant`` to force a mode (tests run
-    the pipelines under both)."""
-    if use_variant is None:
-        from ..plans.probe import supports_variant
-        use_variant = supports_variant(spark)
-    if use_variant:
-        spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION agn_json_pack(s STRING)
-                     RETURNS VARIANT RETURN try_parse_json(s)""")
-        spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION agn_json_get(v VARIANT, p STRING)
-                     RETURNS STRING RETURN CAST(variant_get(v, p) AS STRING)""")
-        spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION agn_json_str(v VARIANT)
-                     RETURNS STRING RETURN CAST(v AS STRING)""")
-    else:
-        spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION agn_json_pack(s STRING)
-                     RETURNS STRING RETURN s""")
-        spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION agn_json_get(v STRING, p STRING)
-                     RETURNS STRING RETURN get_json_object(v, p)""")
-        spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION agn_json_str(v STRING)
-                     RETURNS STRING RETURN v""")
-    spark._agn_json_variant = use_variant
-
-
-def json_variant_mode(spark: SparkSession) -> bool:
-    """Whether decoded-JSON columns are stored as VARIANT this session."""
-    return getattr(spark, "_agn_json_variant", False)

@@ -281,14 +281,6 @@ def run_pipeline(executor: Executor, templates: TemplateSet,
     nothing could reach these dicts until the run returned)."""
     run_vars = {**conf.Vars, **(vars or {}),
                 "UUID": str(uuidlib.uuid4())}  # pipeline.go:48-54
-    # sink DDL for decoded-JSON columns follows the session's dynamic-JSON
-    # mode (VARIANT when supported, STRING fallback) unless the caller
-    # pinned it — the analog of the reference's ClickHouse Dynamic columns
-    if "JSON_COL_TYPE" not in run_vars and hasattr(executor, "spark"):
-        from ..functions.registry import json_variant_mode, register_all
-        register_all(executor.spark)
-        run_vars["JSON_COL_TYPE"] = (
-            "VARIANT" if json_variant_mode(executor.spark) else "STRING")
     start = run_init(executor, templates, run_vars, conf.Init)
 
     ctx = _Ctx()

@@ -11,7 +11,6 @@ dependency.
 
 from __future__ import annotations
 
-import os
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -19,31 +18,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 class ProbeTimeout(RuntimeError):
     pass
-
-
-def supports_variant(spark) -> bool:
-    """Probe once per session whether VariantType + variant_get exist
-    (Spark 4+). Decoded-JSON columns ride VARIANT when available —
-    ``variant_get`` subpath reads are pushdown-friendly and skip
-    re-parsing the JSON text per access (the reference stores decoded
-    inputs as ClickHouse ``Dynamic``,
-    examples/ethereum_decoded_logs/create_table.sql:12). Set
-    ``AGN_DISABLE_VARIANT=1`` to force the JSON-string fallback."""
-    if os.environ.get("AGN_DISABLE_VARIANT"):
-        return False
-    # cached as an attribute ON the session (id(spark) keys are unsafe:
-    # a stopped session's id can be reused by a new object)
-    cached = getattr(spark, "_agn_supports_variant", None)
-    if cached is None:
-        try:
-            spark.sql(
-                """SELECT variant_get(parse_json('{"a": 1}'), '$.a')"""
-            ).collect()
-            cached = True
-        except Exception:
-            cached = False
-        spark._agn_supports_variant = cached
-    return cached
 
 
 def run_startup_probe(spark, max_delay_s: float = 10.0,

@@ -26,7 +26,7 @@ SELECT
     log_index,
     address,
     get_json_object(evt, '$.value.signature') AS signature,
-    agn_json_pack(get_json_object(evt, '$.value.inputs')) AS inputs,
+    try_parse_json(get_json_object(evt, '$.value.inputs')) AS inputs,
     month
 FROM q1
 WHERE get_json_object(evt, '$.error') IS NULL

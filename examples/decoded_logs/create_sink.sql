@@ -1,7 +1,5 @@
 -- decoded logs sink (reference: examples/ethereum_decoded_logs/create_table.sql:1-48;
--- the ClickHouse Dynamic `inputs` column maps to VARIANT when the
--- session supports it, JSON string otherwise; the runner injects
--- JSON_COL_TYPE from the session probe — SURVEY.md §1.2)
+-- the ClickHouse Dynamic `inputs` column is a Spark VARIANT — SURVEY.md §7.2)
 CREATE TABLE IF NOT EXISTS {{.SINK_TABLE}} (
     timestamp          TIMESTAMP,
     block_hash         BINARY,
@@ -11,7 +9,7 @@ CREATE TABLE IF NOT EXISTS {{.SINK_TABLE}} (
     log_index          INT,
     address            BINARY,
     signature          STRING,
-    inputs             {{.JSON_COL_TYPE | default "STRING"}},
+    inputs             VARIANT,
     month              STRING
 )
 USING PARQUET

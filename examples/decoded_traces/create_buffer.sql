@@ -26,8 +26,8 @@ SELECT
     gas,
     gas_used,
     get_json_object(call, '$.value.signature') AS signature,
-    agn_json_pack(get_json_object(call, '$.value.inputs'))  AS inputs,
-    agn_json_pack(get_json_object(call, '$.value.outputs')) AS outputs,
+    try_parse_json(get_json_object(call, '$.value.inputs'))  AS inputs,
+    try_parse_json(get_json_object(call, '$.value.outputs')) AS outputs,
     month
 FROM q1
 WHERE get_json_object(call, '$.error') IS NULL

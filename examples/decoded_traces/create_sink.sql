@@ -11,8 +11,8 @@ CREATE TABLE IF NOT EXISTS {{.SINK_TABLE}} (
     gas                  BIGINT,
     gas_used             BIGINT,
     signature            STRING,
-    inputs               {{.JSON_COL_TYPE | default "STRING"}},
-    outputs              {{.JSON_COL_TYPE | default "STRING"}},
+    inputs               VARIANT,
+    outputs              VARIANT,
     month                STRING
 )
 USING PARQUET

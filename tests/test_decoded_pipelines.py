@@ -37,12 +37,6 @@ def spark():
     yield s
 
 
-def _as_json(v):
-    """Decoded-payload cell → dict under either storage mode (VariantVal
-    when the session stores VARIANT, JSON text under the fallback)."""
-    return json.loads(v.toJson() if hasattr(v, "toJson") else v)
-
-
 def _run(spark, example: str, vars: dict):
     conf = PipelineConfig.from_yaml(
         os.path.join(EXAMPLES, example, "pipeline.yaml"), env={})
@@ -74,10 +68,10 @@ class TestDecodedTraces:
         row = got.where((F.col("block_number") == 5) &
                         (F.col("transaction_position") == 1)).collect()[0]
         assert row["signature"] == "transfer(address,uint256)"
-        inputs = _as_json(row["inputs"])
+        inputs = json.loads(row["inputs"].toJson())
         assert inputs["arg0"] == "0x" + mc.addr(5 + 1 + 1).hex()
         assert inputs["arg1"] == mc.amount(5, 1)
-        outputs = _as_json(row["outputs"])
+        outputs = json.loads(row["outputs"].toJson())
         assert outputs["arg0"] is True
 
 
@@ -99,6 +93,12 @@ class TestDecodedLogsToDaily:
             "SOURCE_TABLE": logs_sink, "ABI_DICT_PATH": abi_path,
             "TARGET_PATH": str(tmp_path / "decoded"),
             "SINK_TABLE": decoded_sink})
+        # variant_get subpath reads work against the decoded sink
+        n = spark.sql(f"""
+            SELECT count(*) c FROM {decoded_sink}
+            WHERE CAST(variant_get(inputs, '$.arg2') AS DECIMAL(38, 0)) > 0
+        """).collect()[0]["c"]
+        assert n == TOTAL_LOGS
 
         daily_sink = f"daily_{uuid.uuid4().hex[:8]}"
         _run(spark, "decoded_logs_to_daily_parquet", {
@@ -113,57 +113,29 @@ class TestDecodedLogsToDaily:
         assert json.loads(got.limit(1).collect()[0]["inputs"])["arg2"] > 0  # daily export is always JSON text
 
 
-class TestVariantModes:
-    def test_variant_sink_when_supported(self, spark, tmp_path):
-        """With Spark 4 the decoded sink stores VARIANT (probe-selected);
-        variant_get subpath reads work against it."""
-        from agnostic_blockchain_etl_spark.plans.probe import supports_variant
-        if not supports_variant(spark):
-            pytest.skip("session has no VariantType")
-        logs_sink, decoded_sink = self._decode(spark, tmp_path)
-        schema = dict((f.name, f.dataType.simpleString())
-                      for f in spark.table(decoded_sink).schema.fields)
-        assert schema["inputs"] == "variant"
-        n = spark.sql(f"""
-            SELECT count(*) c FROM {decoded_sink}
-            WHERE CAST(variant_get(inputs, '$.arg2') AS DECIMAL(38, 0)) > 0
-        """).collect()[0]["c"]
-        assert n == TOTAL_LOGS
-
-    def test_string_fallback_same_content(self, spark, tmp_path):
-        """Forcing the JSON-string mode (older sessions) produces the same
-        decoded content with a STRING sink column."""
-        from agnostic_blockchain_etl_spark.functions.registry import \
-            register_json_helpers
-        register_json_helpers(spark, use_variant=False)
+class TestDecodedSinks:
+    @pytest.mark.parametrize("example,columns", [
+        ("decoded_logs", ["inputs"]),
+        ("decoded_traces", ["inputs", "outputs"])],
+        ids=["decoded_logs", "decoded_traces"])
+    def test_payload_columns_are_variant(self, spark, tmp_path, example,
+                                         columns):
+        """The sink DDL declares the decoded payload columns VARIANT (the
+        reference's ClickHouse Dynamic), rendered from the variables the
+        pipeline.yaml documents and nothing else."""
+        sink = f"sink_{uuid.uuid4().hex[:8]}"
+        ddl = TemplateSet.load(os.path.join(EXAMPLES, example)).render(
+            "create_sink.sql", {
+                "SOURCE_TABLE": "unused", "ABI_DICT_PATH": "unused",
+                "TARGET_PATH": str(tmp_path / "sink"), "SINK_TABLE": sink})
+        spark.sql(ddl)
         try:
-            logs_sink, decoded_sink = self._decode(spark, tmp_path)
-            schema = dict((f.name, f.dataType.simpleString())
-                          for f in spark.table(decoded_sink).schema.fields)
-            assert schema["inputs"] == "string"
-            row = spark.table(decoded_sink).limit(1).collect()[0]
-            assert json.loads(row["inputs"])["arg2"] > 0
+            types = {f.name: f.dataType.simpleString()
+                     for f in spark.table(sink).schema.fields}
         finally:
-            register_json_helpers(spark)  # restore the probed mode
-
-    @staticmethod
-    def _decode(spark, tmp_path):
-        logs_sink = f"logs_{uuid.uuid4().hex[:8]}"
-        _run(spark, "logs_ingest", {
-            "RPC_ENDPOINT": "mock://chain",
-            "LATEST_BLOCK_STATUS": "latest",
-            "TARGET_PATH": str(tmp_path / "logs"), "SINK_TABLE": logs_sink})
-        abi_path = str(tmp_path / "abi.parquet")
-        spark.createDataFrame(
-            [("0x" + mc.TRANSFER_TOPIC0.hex(),
-              ["event Transfer(address indexed,address indexed,uint256)"])],
-            "selector STRING, fullsigs ARRAY<STRING>").write.parquet(abi_path)
-        decoded_sink = f"decoded_{uuid.uuid4().hex[:8]}"
-        _run(spark, "decoded_logs", {
-            "SOURCE_TABLE": logs_sink, "ABI_DICT_PATH": abi_path,
-            "TARGET_PATH": str(tmp_path / "decoded"),
-            "SINK_TABLE": decoded_sink})
-        return logs_sink, decoded_sink
+            spark.sql(f"DROP TABLE {sink}")
+        assert {c: types[c] for c in columns} == \
+            {c: "variant" for c in columns}
 
 
 class TestWordArithmetic:

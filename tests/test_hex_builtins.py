@@ -374,13 +374,26 @@ class TestDifferential:
         values = [None, 0, 1, 2 ** 63 - 1, 2 ** 64, 10 ** 38 - 1, 10 ** 38,
                   2 ** 128, 2 ** 256 - 1] + _words(random.Random(13), 300)
         quantities = [None if n is None else hex(n) for n in values] + \
-            ["0x", "0x0", "0x" + "0" * 63 + "1", "0XFF", "abc", ""]
+            ["0x", "0x0", "0x" + "0" * 63 + "1", "0x0" + "f" * 64, "0XFF",
+             "abc", ""]
         rows = _rows(spark, {"d": "evm_hex_decode_dec(x)"},
                      quantities, "x STRING")
         for r, v in zip(rows, quantities):
             n = None if v is None else hexmod.evm_hex_decode_int(v, "UInt256")
             want = None if n is None or n >= 10 ** 38 else Decimal(n)
             assert r["d"] == want, v
+
+    @pytest.mark.parametrize("x", [hex(2 ** 256), "0x" + "f" * 65],
+                             ids=["2^256", "65_nibbles"])
+    def test_decode_dec_fails_past_uint256(self, spark, ansi, x):
+        """Past UInt256 the query fails, as hex.py raises; below it and
+        at or above 10^38 the value is NULL (test_decode_dec)."""
+        with pytest.raises(SparkRuntimeException,
+                           match="does not fit in UInt256"):
+            _rows(spark, {"d": "evm_hex_decode_dec(x)"}, ["0x1", x],
+                  "x STRING")
+        with pytest.raises(OverflowError):
+            hexmod.evm_hex_decode_int(x, "UInt256")
 
     def test_decode_dec_of_abi_words(self, spark):
         """The erc20_balances form: a 32-byte word, upper-case hex,

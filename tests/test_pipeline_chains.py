@@ -130,10 +130,7 @@ class TestDecodedLogs:
         assert got.count() == TOTAL_LOGS
         row = got.where(F.col("block_number") == 2).collect()[0]
         assert row["signature"] == "Transfer(address,address,uint256)"
-        # decoded payload cell: VariantVal when the session stores VARIANT,
-        # JSON text under the fallback mode
-        v = row["inputs"]
-        inputs = json.loads(v.toJson() if hasattr(v, "toJson") else v)
+        inputs = json.loads(row["inputs"].toJson())
         assert inputs["arg0"] == "0x" + mc.addr(2).hex()
         assert inputs["arg1"] == "0x" + mc.addr(3).hex()
         assert inputs["arg2"] == mc.amount(2, 0)
