@@ -5,7 +5,6 @@ import json
 import pytest
 from hypothesis import given, strategies as st
 from pyspark.errors import PythonException
-from pyspark.sql import functions as F
 
 from agnostic_blockchain_etl_spark.functions import (
     abi, hex as hexmod, keccak, rpc)
@@ -220,8 +219,9 @@ class TestRpc:
                               "", -1, "http://x", transport=rpc.MockTransport(serve))
         assert seen["block"] == "latest"
 
-    # The error envelope and the fail-on-* contract through the registered
-    # SQL UDF, the engine's one RPC path, against the session mock chain.
+    # The fail-on-* contract through the registered SQL UDF, the engine's
+    # one RPC path, against the session mock chain (the error envelope
+    # itself: tests/test_rpc_datasource.py, tests/test_rpc_source.py).
     # max-retries=0: a failing call returns at once instead of backing off.
 
     @pytest.fixture(scope="class")
@@ -234,22 +234,6 @@ class TestRpc:
     def _rpc_sql(method, params, options):
         return (f"SELECT ethereum_rpc('{method}', array({params}), "
                 f"'mock://chain#max-retries=0{options}') AS r FROM range(3)")
-
-    def test_error_envelope_is_a_row(self, spark):
-        """A failing call comes back as an error envelope row, not a task
-        failure: over range(3) in SQL, and with the method a column of a
-        DataFrame, whose other columns are kept."""
-        rows = spark.sql(self._rpc_sql("bogus_method", "", "")).collect()
-        reqs = spark.createDataFrame([(0, "bogus_method")],
-                                     "n LONG, method STRING")
-        fed = reqs.select("n", F.expr(
-            "ethereum_rpc(method, array(), 'mock://chain#max-retries=0')"
-        ).alias("r")).collect()
-        assert [r["n"] for r in fed] == [0]
-        envs = [json.loads(r["r"]) for r in rows + fed]
-        assert len(envs) == 4
-        assert all(e["value"] is None and "bogus_method" in e["error"]
-                   for e in envs)
 
     def test_sql_fail_on_error_fails_query(self, spark):
         q = spark.sql(self._rpc_sql("bogus_method", "", "&fail-on-error=true"))
