@@ -20,9 +20,10 @@ Observed output contract (from template JSON paths):
 
 Inputs/outputs are keyed positionally ``arg0..argN``
 (create_buffer.sql:31 ``evt.value.inputs.arg0``). Values serialize as:
-addresses / bytes → ``0x`` hex strings, integers → JSON numbers (Python
-big-int JSON is exact), bool → true/false, arrays → lists, tuples → nested
-``{"arg0": …}`` objects.
+addresses / bytes → ``0x`` hex strings, integers → JSON numbers, except
+that an integer of absolute value 10^38 or more is a decimal string
+(Spark's ``try_parse_json`` would store it as a DOUBLE), bool →
+true/false, arrays and tuples → JSON arrays.
 
 Signature grammar accepted (superset of what the examples use):
 - ``event Transfer(address indexed from, address indexed, uint256)``
@@ -70,7 +71,8 @@ class AbiType:
             if self.array_dims[-1] == -1:
                 return True
             return self.element_type().is_dynamic
-        if self.base in ("bytes", "string"):
+        if self.base == "string" or (self.base == "bytes"
+                                     and not self.fixed_size):
             return True
         if self.base == "tuple":
             return any(c.is_dynamic for c in self.components)
@@ -157,11 +159,8 @@ def _split_params(s: str) -> list[str]:
             cur = []
         else:
             cur.append(ch)
-    if cur or parts:
-        tail = "".join(cur).strip()
-        if tail:
-            parts.append(tail)
-    return [p for p in (q.strip() for q in parts) if p]
+    parts.append("".join(cur))
+    return [p.strip() for p in parts if p.strip()]
 
 
 # ---------------------------------------------------------------------------
@@ -198,48 +197,23 @@ _SIG_RE = re.compile(
 )
 
 
+# "<type> [indexed] [memory|calldata|storage] [name]": the type contains
+# spaces only inside tuple parens, so the trailing bare words follow it
+_PARAM_RE = re.compile(r"^(.*?)((?:\s+[A-Za-z_$][A-Za-z0-9_$]*)*)$", re.S)
+_KEYWORDS = ("indexed", "memory", "calldata", "storage")
+
+
 def _parse_param(s: str, allow_indexed: bool) -> Param:
-    toks = s.strip()
-    indexed = False
-    name = ""
-    # strip a trailing name and/or 'indexed'/location keywords:
-    # "<type> [indexed|memory|calldata|storage] [name]" — the type may
-    # itself contain spaces only inside tuple parens (handled by
-    # scanning from the right for bare identifiers).
-    t = toks
-    while True:
-        t = t.strip()
-        m = re.search(r"\s+([A-Za-z_$][A-Za-z0-9_$]*)$", t)
-        if not m:
-            break
-        w = m.group(1)
-        if w == "indexed":
-            if not allow_indexed:
-                raise AbiError(f"'indexed' not allowed in {s!r}")
-            indexed = True
-        elif w in ("memory", "calldata", "storage"):
-            pass  # solidity location keywords — irrelevant to ABI layout
-        else:
-            name = w
-        t = t[: m.start()]
-        if name:
-            # only one trailing name allowed; keep stripping 'indexed'
-            # and location keywords sitting between type and name —
-            # "bytes memory data" is normal Solidity (review finding:
-            # the old code checked only for 'indexed' here, so the
-            # location keyword stayed glued to the type and raised
-            # unknown-ABI-type)
-            while True:
-                m2 = re.search(r"\s+(indexed|memory|calldata|storage)$", t)
-                if not m2:
-                    break
-                if m2.group(1) == "indexed":
-                    if not allow_indexed:
-                        raise AbiError(f"'indexed' not allowed in {s!r}")
-                    indexed = True
-                t = t[: m2.start()]
-            break
-    return Param(parse_type(t), indexed=indexed, name=name)
+    t, tail = _PARAM_RE.match(s.strip()).groups()
+    words = tail.split()
+    indexed = "indexed" in words
+    if indexed and not allow_indexed:
+        raise AbiError(f"'indexed' not allowed in {s!r}")
+    names = [w for w in words if w not in _KEYWORDS]
+    if len(names) > 1:
+        raise AbiError(f"malformed parameter {s!r}")
+    return Param(parse_type(t), indexed=indexed,
+                 name=names[0] if names else "")
 
 
 def parse_signature(sig: str) -> Signature:
@@ -258,19 +232,14 @@ def parse_signature(sig: str) -> Signature:
 
 
 @functools.lru_cache(maxsize=4096)
-def _sig_topic0_cached(sig_s: str) -> "tuple[Signature, bytes]":
-    """Per-process memo of (parsed signature, topic0) for the per-ROW
-    decode paths: `evm_decode_event` used to re-parse every candidate
-    signature and re-keccak its canonical form for EVERY log row — the
-    guide-§4.5 init-once class of cost (a pandas-UDF batch of 10k rows
-    paid 10k parses + 10k pure-Python keccaks per candidate). The
-    candidate set of any real workload is a handful of ABI strings, so
-    the cache is effectively a per-worker constant table. Decode paths
-    only READ the Signature, so sharing one instance is safe; the
-    public `parse_signature` contract (a fresh, caller-mutable object)
-    is unchanged."""
+def _sig_topic0_cached(sig_s: str) -> "tuple[Signature, str, bytes]":
+    """(parsed signature, canonical form, topic0) of ``sig_s``, memoised
+    per process: the only parse the per-row kernels make. A workload's
+    candidate set is a handful of ABI strings, so a row costs a lookup,
+    not a parse and a pure-Python keccak. Callers only read the shared
+    Signature; ``parse_signature`` returns a fresh one."""
     s = parse_signature(sig_s)
-    return s, s.topic0()
+    return s, s.canonical(), s.topic0()
 
 
 # ---------------------------------------------------------------------------
@@ -284,27 +253,8 @@ def _read_word(data: bytes, off: int) -> bytes:
     return w
 
 
-def _decode_value(t: AbiType, data: bytes, off: int):
-    """Decode one value of type ``t`` whose head starts at ``off``."""
-    if t.is_array:
-        d = t.array_dims[-1]
-        el = t.element_type()
-        if d == -1:
-            # dynamic types reach decoding ONLY through _decode_at
-            # (their head slot holds a pointer RELATIVE to the
-            # enclosing sequence base, which this function does not
-            # know — the removed inline branch here read it as
-            # absolute and would mis-decode nested dynamics)
-            raise AbiError("internal: dynamic array must decode via "
-                           "_decode_at")
-        return _decode_sequence([el] * d, data, off, inline=True)
-    if t.base == "tuple":
-        return _decode_sequence(list(t.components), data, off, inline=True)
-    if t.base == "string" or (t.base == "bytes" and not t.fixed_size):
-        raise AbiError(f"internal: dynamic {t.base} must decode via "
-                       "_decode_at")
-    word = _read_word(data, off)
-    return _decode_word(t, word)
+def _read_uint(data: bytes, off: int) -> int:
+    return int.from_bytes(_read_word(data, off), "big")
 
 
 def _decode_word(t: AbiType, word: bytes):
@@ -325,22 +275,15 @@ def _decode_word(t: AbiType, word: bytes):
     raise AbiError(f"cannot word-decode type {t.canonical()}")
 
 
-def _decode_sequence(types: list[AbiType], data: bytes, base: int,
-                     inline: bool = False):
-    """Decode a head-sequence of ``types`` starting at absolute offset
-    ``base``. Dynamic members' pointers are relative to ``base``."""
-    if inline:
-        # static inline sequence inside another head — but if any member is
-        # dynamic, the enclosing head held a pointer: caller passes base at
-        # the pointed-to location already resolved by _decode_value for
-        # arrays; for dynamic tuples we must resolve here.
-        pass
+def _decode_sequence(types: list[AbiType], data: bytes, base: int) -> list:
+    """Decode the head sequence of ``types`` starting at absolute offset
+    ``base``. A static member sits in the heads; a dynamic member's head
+    holds the offset of its body, relative to ``base``."""
     out = []
     off = base
     for t in types:
         if t.is_dynamic:
-            ptr = int.from_bytes(_read_word(data, off), "big")
-            out.append(_decode_at(t, data, base + ptr))
+            out.append(_decode_value(t, data, base + _read_uint(data, off)))
             off += _WORD
         else:
             out.append(_decode_value(t, data, off))
@@ -348,30 +291,27 @@ def _decode_sequence(types: list[AbiType], data: bytes, base: int,
     return out
 
 
-def _decode_at(t: AbiType, data: bytes, loc: int):
-    """Decode a dynamic value whose body starts at absolute ``loc``."""
-    if t.is_array and t.array_dims[-1] == -1:
-        n = int.from_bytes(_read_word(data, loc), "big")
-        if n * _WORD > len(data):
-            raise AbiError("array length exceeds payload")
-        return _decode_sequence([t.element_type()] * n, data, loc + _WORD)
-    if t.is_array:  # fixed array of dynamic elements
-        return _decode_sequence([t.element_type()] * t.array_dims[-1], data, loc)
+def _decode_value(t: AbiType, data: bytes, loc: int):
+    """Decode one value of ``t`` whose encoding starts at absolute ``loc``:
+    its head for a static type, its body for a dynamic one."""
+    if t.is_array:
+        n = t.array_dims[-1]
+        if n == -1:
+            n = _read_uint(data, loc)
+            if n * _WORD > len(data):
+                raise AbiError("array length exceeds payload")
+            loc += _WORD
+        return _decode_sequence([t.element_type()] * n, data, loc)
     if t.base == "tuple":
         return _decode_sequence(list(t.components), data, loc)
-    if t.base == "string":
-        n = int.from_bytes(_read_word(data, loc), "big")
+    if t.base == "string" or (t.base == "bytes" and not t.fixed_size):
+        n = _read_uint(data, loc)
         raw = data[loc + _WORD: loc + _WORD + n]
         if len(raw) < n:
-            raise AbiError("truncated string")
-        return raw.decode("utf-8", errors="replace")
-    if t.base == "bytes":
-        n = int.from_bytes(_read_word(data, loc), "big")
-        raw = data[loc + _WORD: loc + _WORD + n]
-        if len(raw) < n:
-            raise AbiError("truncated bytes")
-        return "0x" + raw.hex()
-    raise AbiError(f"not a dynamic type: {t.canonical()}")
+            raise AbiError(f"truncated {t.base}")
+        return (raw.decode("utf-8", errors="replace") if t.base == "string"
+                else "0x" + raw.hex())
+    return _decode_word(t, _read_word(data, loc))
 
 
 def abi_decode(types: list[AbiType], data: bytes) -> list:
@@ -458,8 +398,23 @@ def abi_encode(types: list[AbiType], values: list) -> bytes:
 # Public UDF kernels
 # ---------------------------------------------------------------------------
 
-def _args_object(params: list[Param], values: list) -> dict:
-    return {f"arg{i}": v for i, v in enumerate(values)}
+# Spark's try_parse_json keeps an integer exactly only below this bound
+# (DECIMAL(38, 0)); a larger JSON number becomes a DOUBLE in the VARIANT
+# sinks, so such values are written as decimal strings.
+_JSON_INT_BOUND = 10 ** 38
+
+
+def _json_value(v):
+    if type(v) is int and not -_JSON_INT_BOUND < v < _JSON_INT_BOUND:
+        return str(v)
+    if type(v) is list:
+        return [_json_value(x) for x in v]
+    return v
+
+
+def _args_object(values: list) -> dict:
+    """Decoded values as the ``{"arg0": …}`` JSON object of the outputs."""
+    return {f"arg{i}": _json_value(v) for i, v in enumerate(values)}
 
 
 def _as_bytes(v) -> bytes:
@@ -472,6 +427,66 @@ def _as_bytes(v) -> bytes:
     raise AbiError(f"expected bytes-like, got {type(v).__name__}")
 
 
+def _first_decoding(read_inputs, decode, row: tuple, fullsigs) -> str:
+    """The JSON envelope of both decoders; never raises.
+
+    ``read_inputs(*row)`` returns the row's inputs, or raises AbiError when
+    no candidate can match them. ``decode(*cached parse, *inputs)``
+    returns the value, None to pass over a signature of the other kind,
+    or raises AbiError to reject it. The first value wins; otherwise the
+    error lists every rejection."""
+    try:
+        inputs = read_inputs(*row)
+        errors = []
+        for sig_s in fullsigs or []:
+            try:
+                value = decode(*_sig_topic0_cached(sig_s), *inputs)
+            except AbiError as e:
+                errors.append(str(e))
+                continue
+            if value is not None:
+                return json.dumps({"value": value, "error": None})
+        error = "; ".join(errors) or "no candidate signatures"
+    except AbiError as e:  # from read_inputs: the candidates catch theirs
+        error = str(e)
+    except Exception as e:
+        error = f"{type(e).__name__}: {e}"
+    return json.dumps({"value": None, "error": error})
+
+
+def _event_inputs(topics, data) -> tuple[list[bytes], bytes]:
+    tps = [_as_bytes(t) for t in (topics or [])]
+    payload = _as_bytes(data)
+    if not tps:
+        raise AbiError("no topics")
+    return tps, payload
+
+
+def _decode_event(sig: Signature, canonical: str, topic0: bytes,
+                  tps: list[bytes], payload: bytes) -> dict | None:
+    if sig.kind != "event":
+        return None
+    if topic0 != tps[0]:
+        raise AbiError(f"{canonical}: topic0 mismatch")
+    indexed = [p for p in sig.inputs if p.indexed]
+    if len(indexed) != len(tps) - 1:
+        raise AbiError(f"{canonical}: {len(indexed)} indexed params, "
+                       f"{len(tps) - 1} topics")
+    body = iter(abi_decode([p.type for p in sig.inputs if not p.indexed],
+                           payload))
+    topics = iter(tps[1:])
+    values = []
+    for p in sig.inputs:
+        if not p.indexed:
+            values.append(next(body))
+        elif p.type.is_dynamic:
+            # a dynamic indexed param is stored as its hash
+            values.append("0x" + next(topics).hex())
+        else:
+            values.append(_decode_word(p.type, next(topics)))
+    return {"signature": canonical, "inputs": _args_object(values)}
+
+
 def evm_decode_event(topics, data, fullsigs) -> str:
     """Decode a log against candidate event signatures → JSON string.
 
@@ -479,91 +494,37 @@ def evm_decode_event(topics, data, fullsigs) -> str:
     bytes/hex; ``fullsigs``: candidate signature strings. The first
     candidate whose topic0 matches and decodes cleanly wins.
     """
-    try:
-        tps = [_as_bytes(t) for t in (topics or [])]
-        payload = _as_bytes(data)
-        if not tps:
-            return json.dumps({"value": None, "error": "no topics"})
-        errors = []
-        for sig_s in (fullsigs or []):
-            try:
-                sig, t0 = _sig_topic0_cached(sig_s)
-                if sig.kind != "event":
-                    continue
-                if t0 != tps[0]:
-                    errors.append(f"{sig.canonical()}: topic0 mismatch")
-                    continue
-                indexed = [p for p in sig.inputs if p.indexed]
-                unindexed = [p for p in sig.inputs if not p.indexed]
-                if len(indexed) != len(tps) - 1:
-                    errors.append(
-                        f"{sig.canonical()}: {len(indexed)} indexed params, "
-                        f"{len(tps) - 1} topics")
-                    continue
-                values: list = [None] * len(sig.inputs)
-                ti = 1
-                for i, p in enumerate(sig.inputs):
-                    if p.indexed:
-                        if p.type.is_dynamic:
-                            # dynamic indexed params are stored as their hash
-                            values[i] = "0x" + tps[ti].hex()
-                        else:
-                            values[i] = _decode_word(p.type, tps[ti])
-                        ti += 1
-                body = abi_decode([p.type for p in unindexed], payload)
-                bi = iter(body)
-                for i, p in enumerate(sig.inputs):
-                    if not p.indexed:
-                        values[i] = next(bi)
-                return json.dumps({
-                    "value": {"signature": sig.canonical(),
-                              "inputs": _args_object(sig.inputs, values)},
-                    "error": None,
-                })
-            except AbiError as e:
-                errors.append(str(e))
-        return json.dumps({"value": None,
-                           "error": "; ".join(errors) or "no candidate signatures"})
-    except Exception as e:  # never raise out of the UDF
-        return json.dumps({"value": None, "error": f"{type(e).__name__}: {e}"})
+    return _first_decoding(_event_inputs, _decode_event, (topics, data),
+                           fullsigs)
+
+
+def _call_inputs(input_data, output_data) -> tuple[bytes, bytes]:
+    inp = _as_bytes(input_data)
+    if len(inp) < 4:
+        raise AbiError("input shorter than selector")
+    return inp, _as_bytes(output_data)
+
+
+def _decode_call(sig: Signature, canonical: str, topic0: bytes, inp: bytes,
+                 out: bytes) -> dict:
+    # a bare signature parses as an event: every kind is accepted here
+    if topic0[:4] != inp[:4]:
+        raise AbiError(f"{canonical}: selector mismatch")
+    result = {"signature": canonical,
+              "inputs": _args_object(
+                  abi_decode([p.type for p in sig.inputs], inp[4:]))}
+    if sig.outputs:
+        result["outputs"] = (
+            _args_object(abi_decode([p.type for p in sig.outputs], out))
+            if out else None)
+    return result
 
 
 def evm_decode_call(input_data, output_data, fullsigs) -> str:
     """Decode a call's input (+ optional output) against candidate function
     signatures → JSON string (see module docstring for the contract)."""
-    try:
-        inp = _as_bytes(input_data)
-        out = _as_bytes(output_data)
-        if len(inp) < 4:
-            return json.dumps({"value": None, "error": "input shorter than selector"})
-        errors = []
-        for sig_s in (fullsigs or []):
-            try:
-                sig, t0 = _sig_topic0_cached(sig_s)
-                if sig.kind != "function":
-                    # bare signatures default to 'event'; accept them as calls
-                    sig = Signature("function", sig.name, sig.inputs, sig.outputs)
-                # selector = keccak(canonical)[:4]; canonical() ignores
-                # kind, so the cached topic0 prefix IS the selector
-                if t0[:4] != inp[:4]:
-                    errors.append(f"{sig.canonical()}: selector mismatch")
-                    continue
-                in_vals = abi_decode([p.type for p in sig.inputs], inp[4:])
-                result = {"signature": sig.canonical(),
-                          "inputs": _args_object(sig.inputs, in_vals)}
-                if sig.outputs:
-                    if out:
-                        out_vals = abi_decode([p.type for p in sig.outputs], out)
-                        result["outputs"] = _args_object(sig.outputs, out_vals)
-                    else:
-                        result["outputs"] = None
-                return json.dumps({"value": result, "error": None})
-            except AbiError as e:
-                errors.append(str(e))
-        return json.dumps({"value": None,
-                           "error": "; ".join(errors) or "no candidate signatures"})
-    except Exception as e:
-        return json.dumps({"value": None, "error": f"{type(e).__name__}: {e}"})
+    return _first_decoding(_call_inputs, _decode_call,
+                           (input_data, output_data), fullsigs)
 
 
 def encode_call_data(func_sig: str, args: list) -> bytes:
@@ -571,12 +532,11 @@ def encode_call_data(func_sig: str, args: list) -> bytes:
 
     ``func_sig`` uses the reference's syntax, e.g.
     ``'function balanceOf(address)(uint256)'``."""
-    sig = parse_signature(func_sig)
-    return sig.selector() + abi_encode([p.type for p in sig.inputs], args)
+    sig, _, topic0 = _sig_topic0_cached(func_sig)
+    return topic0[:4] + abi_encode([p.type for p in sig.inputs], args)
 
 
 def decode_call_result(func_sig: str, data: bytes) -> dict:
     """Decode eth_call return data into ``{"arg0": …}`` per the output types."""
-    sig = parse_signature(func_sig)
-    vals = abi_decode([p.type for p in sig.outputs], data)
-    return _args_object(sig.outputs, vals)
+    sig, _, _ = _sig_topic0_cached(func_sig)
+    return _args_object(abi_decode([p.type for p in sig.outputs], data))

@@ -9,13 +9,25 @@ and ``#fail-on-retryable-error=true`` (erc20 create_buffer.sql:46).
 
 Return contract (matches the templates' ``JSONExtract(..., 'value', ...)``
 paths): every call returns a JSON string ``{"value": <result>, "error":
-<message-or-null>}``. With ``fail-on-error`` the call raises instead of
-embedding the error; ``fail-on-null`` raises when the RPC result is null.
+<message-or-null>}``.
+
+Retry-and-fail policy. ``RpcError.retryable`` is decided where the
+error is raised: ``HttpTransport`` marks HTTP 429/502/503/504, a JSON-RPC
+error object with code 429, a timeout and a refused or reset connection;
+nothing else is retryable. A retryable error is retried ``max-retries``
+times (default 3) after ``retry-backoff`` × 2^attempt s (default 0.5).
+Then the fragment options decide, for ``ethereum_rpc_call`` also on a
+failure to encode its call or decode the result (never retryable):
+
+    ``fail-on-error``            raises on any error
+    ``fail-on-retryable-error``  raises on an error still retryable
+    ``fail-on-null``             raises on a null result, never on an error
+
+An error no option raises is the envelope's ``error``.
 
 Transports:
 - ``HttpTransport`` — stdlib urllib, one JSON-RPC request per POST (no
-  third-party deps). Retry/backoff lives in ``ethereum_rpc``, driven by
-  the endpoint fragment options.
+  third-party deps); the retries live in ``ethereum_rpc``.
 - ``MockTransport`` — canned (method, params) → response corpus for tests
   (FIXTURES.md §8); also accepts a callable.
 
@@ -28,8 +40,11 @@ examples/ethereum_transactions/pipeline.yaml:26).
 
 from __future__ import annotations
 
+import functools
+import itertools
 import json
 import time
+import urllib.error
 import urllib.request
 from dataclasses import dataclass
 from typing import Any, Callable
@@ -40,7 +55,12 @@ from .hex import evm_hex_decode, evm_hex_encode_int
 
 
 class RpcError(RuntimeError):
-    """An RPC transport or server error surfaced due to fail-on-* options."""
+    """An RPC transport or server error; ``retryable`` when a retry may
+    succeed (module docstring)."""
+
+    def __init__(self, msg: str, retryable: bool = False):
+        super().__init__(msg)
+        self.retryable = retryable
 
 
 @dataclass(frozen=True)
@@ -55,6 +75,7 @@ class EndpointOptions:
     retry_backoff_s: float = 0.5
 
     @classmethod
+    @functools.lru_cache(maxsize=64)  # a template has few endpoints
     def parse(cls, endpoint: str) -> "EndpointOptions":
         parts = urlsplit(endpoint)
         opts = {k: v[-1] for k, v in parse_qs(parts.fragment).items()}
@@ -75,12 +96,17 @@ class EndpointOptions:
 
 class Transport:
     def call(self, url: str, method: str, params: list) -> Any:
-        """Return the JSON-RPC ``result``; raise RpcError on server error."""
+        """Return the JSON-RPC ``result``; raise RpcError on server error,
+        ``retryable`` when a retry may succeed."""
         raise NotImplementedError
 
 
+_RETRYABLE_HTTP = (429, 502, 503, 504)
+
+
 class HttpTransport(Transport):
-    """stdlib JSON-RPC POST transport with bounded retry."""
+    """stdlib JSON-RPC POST transport; each failure is an RpcError that
+    says whether a retry may succeed."""
 
     def __init__(self, timeout_s: float = 30.0):
         self.timeout_s = timeout_s
@@ -92,10 +118,21 @@ class HttpTransport(Transport):
                            "method": method, "params": params}).encode()
         req = urllib.request.Request(
             url, data=body, headers={"Content-Type": "application/json"})
-        with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
-            payload = json.loads(resp.read())
-        if "error" in payload and payload["error"]:
-            raise RpcError(str(payload["error"]))
+        try:
+            with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
+                payload = json.loads(resp.read())
+        except urllib.error.HTTPError as e:
+            raise RpcError(f"HTTP {e.code} {e.reason}",
+                           retryable=e.code in _RETRYABLE_HTTP) from e
+        except OSError as e:  # a URLError carries the socket error
+            cause = e.reason if isinstance(e, urllib.error.URLError) else e
+            raise RpcError(str(cause), retryable=isinstance(
+                cause, (TimeoutError, ConnectionRefusedError,
+                        ConnectionResetError))) from e
+        err = payload.get("error")
+        if err:
+            raise RpcError(str(err), retryable=isinstance(err, dict)
+                           and err.get("code") == 429)
         return payload.get("result")
 
 
@@ -152,13 +189,6 @@ def get_default_transport() -> Transport:
     return HttpTransport()
 
 
-_RETRYABLE_MARKERS = ("timeout", "timed out", "connection", "429", "503", "502")
-
-
-def _is_retryable(err: Exception) -> bool:
-    return any(m in str(err).lower() for m in _RETRYABLE_MARKERS)
-
-
 def _json_typed_params(params: list) -> list:
     """Decode each string param as a JSON value when it parses as one.
 
@@ -181,6 +211,39 @@ def _json_typed_params(params: list) -> list:
     return out
 
 
+def _call(opts: EndpointOptions, method: str, params: list,
+          transport: Transport | None) -> tuple[Any, str | None]:
+    """One JSON-RPC call under the endpoint's retry-and-fail policy →
+    ``(result, None)`` or ``(None, error message)`` (module docstring)."""
+    t = transport or get_default_transport()
+    for attempt in itertools.count():
+        try:
+            result = t.call(opts.url, method, params)
+        except Exception as e:
+            if (isinstance(e, RpcError) and e.retryable
+                    and attempt < opts.max_retries):
+                time.sleep(opts.retry_backoff_s * 2 ** attempt)
+                continue
+            return _failed(opts, e)
+        if result is None and opts.fail_on_null:
+            raise RpcError(f"{method}{params}: null result")
+        return result, None
+
+
+def _failed(opts: EndpointOptions, err: Exception) -> tuple[None, str]:
+    """The fail-on-* decision for an error: raise it, or return it as the
+    ``(None, message)`` of the envelope."""
+    msg = f"{type(err).__name__}: {err}"
+    retryable = isinstance(err, RpcError) and err.retryable
+    if opts.fail_on_error or (opts.fail_on_retryable_error and retryable):
+        raise RpcError(msg) from err
+    return None, msg
+
+
+def _envelope(value: Any, error: str | None) -> str:
+    return json.dumps({"value": value, "error": error})
+
+
 def ethereum_rpc(method: str, params: list, endpoint: str,
                  transport: Transport | None = None) -> str:
     """Perform one JSON-RPC call → ``{"value": …, "error": …}`` JSON string.
@@ -189,34 +252,8 @@ def ethereum_rpc(method: str, params: list, endpoint: str,
     (create_buffer.sql:40-44) and its JSON-typed param encoding
     (see ``_json_typed_params``: ``'false'`` must reach the node as a
     JSON boolean or real endpoints reject the call with -32602)."""
-    opts = EndpointOptions.parse(endpoint)
-    params = _json_typed_params(list(params))
-    t = transport or get_default_transport()
-    last_err: Exception | None = None
-    for attempt in range(opts.max_retries + 1):
-        try:
-            result = t.call(opts.url, method, list(params))
-            if result is None and opts.fail_on_null:
-                raise RpcError(f"{method}{params}: null result")
-            return json.dumps({"value": result, "error": None})
-        except RpcError as e:
-            last_err = e
-            if _is_retryable(e) and attempt < opts.max_retries:
-                time.sleep(opts.retry_backoff_s * (2 ** attempt))
-                continue
-            break
-        except Exception as e:  # transport-level failure
-            last_err = e
-            if attempt < opts.max_retries:
-                time.sleep(opts.retry_backoff_s * (2 ** attempt))
-                continue
-            break
-    msg = f"{type(last_err).__name__}: {last_err}"
-    if opts.fail_on_error or opts.fail_on_null:
-        raise RpcError(msg)
-    if opts.fail_on_retryable_error and _is_retryable(last_err):
-        raise RpcError(msg)
-    return json.dumps({"value": None, "error": msg})
+    return _envelope(*_call(EndpointOptions.parse(endpoint), method,
+                            _json_typed_params(list(params)), transport))
 
 
 def ethereum_rpc_call(to: str, func_sig: str, args_json: str,
@@ -231,23 +268,17 @@ def ethereum_rpc_call(to: str, func_sig: str, args_json: str,
     """
     opts = EndpointOptions.parse(endpoint)
     try:
-        args = json.loads(args_json) if args_json else []
-        data = encode_call_data(func_sig, args)
+        data = encode_call_data(func_sig,
+                                json.loads(args_json) if args_json else [])
         block = "latest" if block_number < 0 else evm_hex_encode_int(block_number)
-        raw = ethereum_rpc(
-            "eth_call",
-            [{"to": to, "data": "0x" + data.hex()}, block],
-            endpoint, transport=transport)
-        envelope = json.loads(raw)
-        if envelope["error"] is not None or envelope["value"] is None:
-            return raw
-        out = evm_hex_decode(envelope["value"])
-        return json.dumps({"value": decode_call_result(func_sig, out),
-                           "error": None})
-    except RpcError:
-        raise
     except Exception as e:
-        msg = f"{type(e).__name__}: {e}"
-        if opts.fail_on_error:
-            raise RpcError(msg)
-        return json.dumps({"value": None, "error": msg})
+        return _envelope(*_failed(opts, e))
+    value, error = _call(opts, "eth_call",
+                         [{"to": to, "data": "0x" + data.hex()}, block],
+                         transport)
+    if value is not None:
+        try:
+            value = decode_call_result(func_sig, evm_hex_decode(value))
+        except Exception as e:
+            value, error = _failed(opts, e)
+    return _envelope(value, error)

@@ -15,9 +15,9 @@ scheme                read_text   list_sql (prefix listing)
 http(s)://            yes         no — plain HTTP cannot list; pass
                                   ``--template-path`` to a listable
                                   location
-s3://                 boto3-gated boto3-gated (no AWS SDK ships in
-                                  this container; the code path is
-                                  real and errors actionably)
+s3://                 via boto3   via boto3 (an optional
+                                  dependency: without it both raise
+                                  ObjstrError saying so)
 ====================  ==========  ================================
 """
 
@@ -41,7 +41,7 @@ def _scheme(url: str) -> str:
 def _s3_client():
     try:
         import boto3  # type: ignore
-    except ImportError as ex:  # pragma: no cover - no SDK in container
+    except ImportError as ex:  # pragma: no cover - boto3 is optional
         raise ObjstrError(
             "s3:// URLs need boto3, which is not installed in this "
             "environment; fetch the object to a local path or serve it "

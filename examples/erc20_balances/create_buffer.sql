@@ -16,7 +16,10 @@ WITH logs AS (
            evm_hex_decode_dec(concat('0x', hex(data))) AS amount
     FROM {{.SOURCE_TABLE}}
     WHERE block_number >= {{.START}} AND block_number <= {{.END}}
-      AND element_at(topics, 1) = keccak256('Transfer(address,address,uint256)')
+      -- keccak256('Transfer(address,address,uint256)'), written out: Spark
+      -- cannot fold a Python UDF, so the call would run once per log
+      AND element_at(topics, 1) =
+          X'ddf252ad1be2c89b69c2b068fc378daa952ba7f163c4a11628f55a4df523b3ef'
       AND size(topics) == 3
 ),
 tokens AS (

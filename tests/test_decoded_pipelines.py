@@ -163,3 +163,27 @@ class TestWordArithmetic:
             "SELECT evm_word_to_str(evm_word_add(a, b)) AS s FROM words2"
         ).collect()[0]
         assert row["s"] == "0"  # EVM wrapping semantics
+
+
+class TestLargeIntegersStayExact:
+    @pytest.mark.parametrize("amount", [2 ** 200, 10 ** 38, 10 ** 38 - 1],
+                             ids=["2^200", "10^38", "10^38-1"])
+    def test_decoded_amount_keeps_its_digits(self, spark, amount):
+        """``try_parse_json`` stores a JSON integer past DECIMAL(38, 0) as
+        a DOUBLE (2^200 read back as 1.6069380442589903E60), so the
+        decoder writes such integers as decimal strings."""
+        t0 = mc.TRANSFER_TOPIC0
+        spark.createDataFrame(
+            [([t0, mc.addr(1).rjust(32, b"\0"), mc.addr(2).rjust(32, b"\0")],
+              amount.to_bytes(32, "big"))],
+            "topics ARRAY<BINARY>, data BINARY"
+        ).createOrReplaceTempView("big_transfer")
+        got = spark.sql("""
+            SELECT CAST(try_parse_json(get_json_object(evm_decode_event(
+                       topics, data, array('event Transfer(address indexed,'
+                                           'address indexed,uint256)')),
+                       '$.value.inputs')) AS STRING) AS inputs
+            FROM big_transfer""").collect()[0]["inputs"]
+        arg2 = json.loads(got)["arg2"]
+        assert int(arg2) == amount
+        assert isinstance(arg2, str) == (amount >= 10 ** 38)

@@ -17,7 +17,7 @@ class TestKeccak:
             "0xc5d2460186f7233c927e7db2dcc703c0e500b653ca82273b7bfad8045d85a470")
         assert keccak.keccak256_hex("abc") == (
             "0x4e03657aea45a94fc7d47ba826c8d667c0d1e6e33a64a036ec44f58fa12d6c45")
-        # the ERC20 Transfer topic0 the erc20 pipeline constant-folds
+        # the ERC20 Transfer topic0 the erc20 pipeline writes as a literal
         assert keccak.keccak256_hex("Transfer(address,address,uint256)") == (
             "0xddf252ad1be2c89b69c2b068fc378daa952ba7f163c4a11628f55a4df523b3ef")
 
@@ -121,6 +121,17 @@ class TestAbi:
         t = abi.parse_type("(uint256,(address,bool))")
         enc = abi.abi_encode([t], [[7, ["0x" + "ab" * 20, True]]])
         assert abi.abi_decode([t], enc) == [[7, ["0x" + "ab" * 20, True]]]
+
+    def test_fixed_bytes_are_static(self):
+        t = [abi.parse_type("bytes4"), abi.parse_type("uint8")]
+        assert abi.abi_encode(t, ["0x01020304", 5]) == bytes.fromhex(
+            "01020304".ljust(64, "0") + "05".rjust(64, "0"))
+        word = bytes(range(32))
+        r = json.loads(abi.evm_decode_event(
+            [keccak.keccak256("E(bytes32)")], word, ["event E(bytes32)"]))
+        assert r == {"value": {"signature": "E(bytes32)",
+                               "inputs": {"arg0": "0x" + word.hex()}},
+                     "error": None}
 
     def test_decode_call(self):
         cd = abi.encode_call_data("function balanceOf(address)(uint256)",
