@@ -7,7 +7,8 @@ Pure-Python kernels + Spark registration:
 - ``keccak``  — keccak256 (Ethereum padding variant)
 - ``abi``     — signature parsing, ABI encode/decode, evm_decode_event/call
 - ``rpc``     — ethereum_rpc / ethereum_rpc_call with fragment options
-- ``registry``— ``register_all(spark)``
+- ``words``   — evm_word_* exact UInt256 arithmetic
+- ``registry``— ``register_all(spark)``: the row kernels as Arrow row UDFs
 """
 
 from .abi import evm_decode_call, evm_decode_event

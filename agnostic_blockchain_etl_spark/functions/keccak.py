@@ -8,8 +8,8 @@ constant-fold event topic0 values, e.g.
 This is a from-scratch implementation of Keccak-f[1600] with rate 1088 /
 capacity 512 and multi-rate padding byte ``0x01`` (Ethereum's Keccak, NOT
 SHA3-256 whose domain byte is 0x06), written against the public Keccak
-specification. Hot-path use inside Spark goes through the pandas UDF in
-``registry.py`` which vectorizes over Arrow batches.
+specification. In SQL, ``register_all`` registers ``keccak256`` as an
+Arrow row UDF (``registry.py``), which calls it once per row.
 """
 
 from __future__ import annotations
@@ -66,8 +66,11 @@ def _keccak_f(state: list[int]) -> None:
         state[0] ^= rc
 
 
-def keccak256(data: bytes | str) -> bytes:
-    """Keccak-256 digest of ``data`` (str is UTF-8 encoded first)."""
+def keccak256(data: bytes | str | None) -> bytes | None:
+    """Keccak-256 digest of ``data`` (str is UTF-8 encoded first); None
+    for None, as SQL's ``keccak256(NULL)`` is NULL."""
+    if data is None:
+        return None
     if isinstance(data, str):
         data = data.encode("utf-8")
     state = [0] * 25

@@ -12,12 +12,13 @@ functions built from the forms of ``functions/hexsql.py``: they inline
 into whole-stage codegen (but not into a lambda, where they fail
 analysis as Python UDFs do). Decoded ABI payloads need no helper: the
 decode templates store them as VARIANT with the built-ins
-``try_parse_json`` and ``CAST(… AS STRING)``. ``keccak256``
-and the decode UDFs are **pandas UDFs** (Arrow record batches, not
-pickled rows; decoding is CPU-bound and benefits from batch
-amortization). The RPC functions are pandas UDFs as well: one transport
-is resolved per Arrow batch, so SQL-verbatim pipelines get
-connection/retry-state reuse.
+``try_parse_json`` and ``CAST(… AS STRING)``. Every other name is a row
+kernel: a plain Python function of ``keccak``, ``abi``, ``rpc`` or
+``words``, registered as Spark's **Arrow row UDF**
+(``udf(fn, returnType, useArrow=True)``). Spark ships each Arrow batch to
+the Python worker and calls the function once per row, with arrays as
+lists and NULL as ``None``; each kernel writes its own NULL-argument
+rule, so the Python API and SQL agree.
 
 The RPC and decode UDFs are registered **nondeterministic**: a
 deterministic UDF is a pure function to the optimizer, which may
@@ -37,83 +38,24 @@ goes through them.
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType, StringType
+from pyspark.sql.functions import udf
+from pyspark.sql.types import BinaryType, IntegerType, StringType
 
-from . import abi, hexsql, keccak, rpc
+from . import abi, hexsql, keccak, rpc, words
 
-
-# ---------------------------------------------------------------------------
-# pandas UDF kernels
-# ---------------------------------------------------------------------------
-
-@pandas_udf(BinaryType())
-def _udf_keccak256(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: keccak.keccak256(v) if v is not None else None)
-
-
-@pandas_udf(StringType())
-def _udf_decode_event(topics: pd.Series, data: pd.Series, fullsigs: pd.Series) -> pd.Series:
-    out = []
-    for t, d, f in zip(topics, data, fullsigs):
-        out.append(abi.evm_decode_event(
-            list(t) if t is not None else [], d,
-            list(f) if f is not None else []))
-    return pd.Series(out)
-
-
-@pandas_udf(StringType())
-def _udf_decode_call(inp: pd.Series, outp: pd.Series, fullsigs: pd.Series) -> pd.Series:
-    out = []
-    for i, o, f in zip(inp, outp, fullsigs):
-        out.append(abi.evm_decode_call(i, o, list(f) if f is not None else []))
-    return pd.Series(out)
-
-
-@pandas_udf(StringType())
-def _udf_ethereum_rpc(method: pd.Series, params: pd.Series,
-                      endpoint: pd.Series) -> pd.Series:
-    # one transport per Arrow batch: connection/retry state is reused
-    # across the batch's calls instead of re-resolved per row
-    t = rpc.get_default_transport()
-
-    def one(m, p, e):
-        # null-safe like every other kernel UDF here: a NULL method/
-        # endpoint returns the error envelope instead of raising out
-        # of the UDF and killing the task (review finding); pd.isna
-        # because Arrow surfaces numeric NULLs as NaN, not None
-        if pd.isna(m) or pd.isna(e):
-            return json.dumps({"value": None,
-                               "error": "null method or endpoint"})
-        return rpc.ethereum_rpc(m, list(p) if p is not None else [], e,
-                                transport=t)
-
-    return pd.Series([one(m, p, e)
-                      for m, p, e in zip(method, params, endpoint)])
-
-
-@pandas_udf(StringType())
-def _udf_ethereum_rpc_call(to: pd.Series, func_sig: pd.Series,
-                           args_json: pd.Series, block_number: pd.Series,
-                           endpoint: pd.Series) -> pd.Series:
-    t = rpc.get_default_transport()
-
-    def one(a, f, j, b, e):
-        if any(pd.isna(v) for v in (a, f, b, e)):
-            return json.dumps({"value": None,
-                               "error": "null to/func_sig/block_number/"
-                                        "endpoint"})
-        return rpc.ethereum_rpc_call(a, f,
-                                     "" if pd.isna(j) else j,
-                                     int(b), e, transport=t)
-
-    return pd.Series([one(a, f, j, b, e)
-                      for a, f, j, b, e in zip(to, func_sig, args_json,
-                                               block_number, endpoint)])
+# SQL name, kernel, return type, nondeterministic (module docstring)
+_ROW_KERNELS = (
+    ("keccak256", keccak.keccak256, BinaryType(), False),
+    ("evm_decode_event", abi.evm_decode_event, StringType(), True),
+    ("evm_decode_call", abi.evm_decode_call, StringType(), True),
+    ("ethereum_rpc", rpc.ethereum_rpc, StringType(), True),
+    ("ethereum_rpc_call", rpc.ethereum_rpc_call, StringType(), True),
+    ("evm_word_add", words.evm_word_add, BinaryType(), False),
+    ("evm_word_sub", words.evm_word_sub, BinaryType(), False),
+    ("evm_word_cmp", words.evm_word_cmp, IntegerType(), False),
+    ("evm_word_to_str", words.evm_word_to_str, StringType(), False),
+)
 
 
 def register_all(spark: SparkSession) -> None:
@@ -127,15 +69,8 @@ def register_all(spark: SparkSession) -> None:
     for signature, returns, body in hexsql.FUNCTIONS:
         spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {signature} "
                   f"RETURNS {returns} RETURN {body}")
-    spark.udf.register("keccak256", _udf_keccak256)
-    # nondeterministic so a filter on the decode cannot clone it into a
-    # second Python evaluation (module docstring)
-    spark.udf.register("evm_decode_event", _udf_decode_event.asNondeterministic())
-    spark.udf.register("evm_decode_call", _udf_decode_call.asNondeterministic())
-    # an external call is not a pure function (module docstring)
-    spark.udf.register("ethereum_rpc", _udf_ethereum_rpc.asNondeterministic())
-    spark.udf.register("ethereum_rpc_call",
-                       _udf_ethereum_rpc_call.asNondeterministic())
-    from .words import register_words
-    register_words(spark)
+    for name, fn, returns, nondeterministic in _ROW_KERNELS:
+        f = udf(fn, returns, useArrow=True)
+        spark.udf.register(name, f.asNondeterministic() if nondeterministic
+                           else f)
     spark._agn_udfs_registered = True

@@ -31,8 +31,9 @@ Transports:
 - ``MockTransport`` — canned (method, params) → response corpus for tests
   (FIXTURES.md §8); also accepts a callable.
 
-Inside Spark these kernels run only as the registered pandas UDFs
-(``functions/registry.py``), which resolve one transport per Arrow batch.
+Inside Spark these kernels run only as the Arrow row UDFs that
+``register_all`` registers (``functions/registry.py``), once per row,
+through the process's default transport (``get_default_transport``).
 Parallelism is the buffer's input partitions × the pipeline's Workers,
 the same two knobs the reference tunes (internal/pipeline/batcher.go:64,
 examples/ethereum_transactions/pipeline.yaml:26).
@@ -41,8 +42,10 @@ examples/ethereum_transactions/pipeline.yaml:26).
 from __future__ import annotations
 
 import functools
+import importlib
 import itertools
 import json
+import os
 import time
 import urllib.error
 import urllib.request
@@ -157,36 +160,21 @@ class MockTransport(Transport):
         return self.corpus[key]
 
 
-_DEFAULT_TRANSPORT: Transport | None = None
-
-
-def set_default_transport(t: Transport | None) -> None:
-    """Install a process-wide transport (tests install MockTransport here;
-    executors inherit it via the closure serialized into the UDF)."""
-    global _DEFAULT_TRANSPORT
-    _DEFAULT_TRANSPORT = t
-
-
+@functools.cache
 def get_default_transport() -> Transport:
-    """Resolve the transport: explicit install > env-configured mock > HTTP.
+    """The transport of a call made without one, resolved once per
+    process: the ``AGN_RPC_MOCK`` transport, else one ``HttpTransport``.
 
     ``AGN_RPC_MOCK=module:attr`` names a Transport (or factory) to import —
     env vars reach Spark's Python workers where module globals set on the
     driver do not, so tests/offline pipelines configure the mock this way.
     """
-    global _DEFAULT_TRANSPORT
-    if _DEFAULT_TRANSPORT is not None:
-        return _DEFAULT_TRANSPORT
-    import importlib
-    import os
     spec = os.environ.get("AGN_RPC_MOCK")
-    if spec:
-        mod_name, _, attr = spec.partition(":")
-        obj = getattr(importlib.import_module(mod_name), attr)
-        t = obj() if callable(obj) and not isinstance(obj, Transport) else obj
-        _DEFAULT_TRANSPORT = t
-        return t
-    return HttpTransport()
+    if not spec:
+        return HttpTransport()
+    mod_name, _, attr = spec.partition(":")
+    obj = getattr(importlib.import_module(mod_name), attr)
+    return obj() if callable(obj) and not isinstance(obj, Transport) else obj
 
 
 def _json_typed_params(params: list) -> list:
@@ -244,28 +232,37 @@ def _envelope(value: Any, error: str | None) -> str:
     return json.dumps({"value": value, "error": error})
 
 
-def ethereum_rpc(method: str, params: list, endpoint: str,
+def ethereum_rpc(method: str | None, params: list | None,
+                 endpoint: str | None,
                  transport: Transport | None = None) -> str:
     """Perform one JSON-RPC call → ``{"value": …, "error": …}`` JSON string.
 
     Mirrors the reference UDF's envelope + fragment-option semantics
     (create_buffer.sql:40-44) and its JSON-typed param encoding
     (see ``_json_typed_params``: ``'false'`` must reach the node as a
-    JSON boolean or real endpoints reject the call with -32602)."""
+    JSON boolean or real endpoints reject the call with -32602). A NULL
+    ``params`` is no params; a NULL method or endpoint is an error
+    envelope."""
+    if method is None or endpoint is None:
+        return _envelope(None, "null method or endpoint")
     return _envelope(*_call(EndpointOptions.parse(endpoint), method,
-                            _json_typed_params(list(params)), transport))
+                            _json_typed_params(params or []), transport))
 
 
-def ethereum_rpc_call(to: str, func_sig: str, args_json: str,
-                      block_number: int, endpoint: str,
+def ethereum_rpc_call(to: str | None, func_sig: str | None,
+                      args_json: str | None, block_number: int | None,
+                      endpoint: str | None,
                       transport: Transport | None = None) -> str:
     """``eth_call`` a contract read and ABI-decode the result.
 
     Mirrors the reference UDF (erc20 create_buffer.sql:40-61): ``to`` is a
     0x-address, ``func_sig`` like ``'function symbol()(string)'``,
     ``args_json`` a JSON array of arguments ('' = none), ``block_number``
-    -1 = latest. Returns ``{"value": {"arg0": …}, "error": …}``.
+    -1 = latest. Returns ``{"value": {"arg0": …}, "error": …}``; a NULL
+    ``args_json`` is no arguments, any other NULL an error envelope.
     """
+    if None in (to, func_sig, block_number, endpoint):
+        return _envelope(None, "null to/func_sig/block_number/endpoint")
     opts = EndpointOptions.parse(endpoint)
     try:
         data = encode_call_data(func_sig,

@@ -10,15 +10,11 @@ digits. The engine's dual representation:
   the reference's own float derivation (erc20 create_buffer.sql:118).
 
 This module supplies exact arithmetic on the canonical words for the
-overflow cases, as Arrow-batched pandas UDFs registered alongside the
-rest of the kernel library.
+overflow cases: plain functions, NULL if an argument is NULL, which
+``register_all`` registers as Arrow row UDFs under the same names.
 """
 
 from __future__ import annotations
-
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType, IntegerType, StringType
 
 _MASK256 = (1 << 256) - 1
 
@@ -31,46 +27,29 @@ def int_to_word(n: int) -> bytes:
     return (n & _MASK256).to_bytes(32, "big")
 
 
-@pandas_udf(BinaryType())
-def evm_word_add(a: pd.Series, b: pd.Series) -> pd.Series:
+def evm_word_add(a: bytes | None, b: bytes | None) -> bytes | None:
     """Exact 256-bit addition (wrapping, EVM semantics)."""
-    return pd.Series([
-        None if (x is None or y is None)
-        else int_to_word(word_to_int(bytes(x)) + word_to_int(bytes(y)))
-        for x, y in zip(a, b)])
+    if a is None or b is None:
+        return None
+    return int_to_word(word_to_int(a) + word_to_int(b))
 
 
-@pandas_udf(BinaryType())
-def evm_word_sub(a: pd.Series, b: pd.Series) -> pd.Series:
+def evm_word_sub(a: bytes | None, b: bytes | None) -> bytes | None:
     """Exact 256-bit subtraction (wrapping)."""
-    return pd.Series([
-        None if (x is None or y is None)
-        else int_to_word(word_to_int(bytes(x)) - word_to_int(bytes(y)))
-        for x, y in zip(a, b)])
+    if a is None or b is None:
+        return None
+    return int_to_word(word_to_int(a) - word_to_int(b))
 
 
-@pandas_udf(IntegerType())
-def evm_word_cmp(a: pd.Series, b: pd.Series) -> pd.Series:
+def evm_word_cmp(a: bytes | None, b: bytes | None) -> int | None:
     """Three-way compare of 256-bit words (-1/0/1). Big-endian words also
     compare correctly as raw bytes — this exists for explicit intent."""
-    out = []
-    for x, y in zip(a, b):
-        if x is None or y is None:
-            out.append(None)
-        else:
-            xi, yi = word_to_int(bytes(x)), word_to_int(bytes(y))
-            out.append((xi > yi) - (xi < yi))
-    return pd.Series(out)
+    if a is None or b is None:
+        return None
+    x, y = word_to_int(a), word_to_int(b)
+    return (x > y) - (x < y)
 
 
-@pandas_udf(StringType())
-def evm_word_to_str(a: pd.Series) -> pd.Series:
+def evm_word_to_str(a: bytes | None) -> str | None:
     """Decimal string of a 256-bit word (exact, any magnitude)."""
-    return a.map(lambda w: None if w is None else str(word_to_int(bytes(w))))
-
-
-def register_words(spark) -> None:
-    spark.udf.register("evm_word_add", evm_word_add)
-    spark.udf.register("evm_word_sub", evm_word_sub)
-    spark.udf.register("evm_word_cmp", evm_word_cmp)
-    spark.udf.register("evm_word_to_str", evm_word_to_str)
+    return None if a is None else str(word_to_int(a))

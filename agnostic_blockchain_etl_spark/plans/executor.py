@@ -41,14 +41,19 @@ class Executor:
 def split_statements(sql: str) -> list[str]:
     """Split a rendered .sql file into statements on top-level semicolons
     (string-literal aware). Reference files hold one statement each, but we
-    accept multi-statement files for convenience."""
+    accept multi-statement files for convenience.
+
+    Quotes follow Spark's lexer: a backslash escapes the next character in
+    a '…' or "…" literal, but not in a raw r'…'/R"…" literal nor in a
+    `…` identifier; a doubled quote (`a``b`) reads as close-and-reopen."""
     parts, cur, i, n = [], [], 0, len(sql)
     in_str: str | None = None
+    escapes = False
     while i < n:
         ch = sql[i]
         if in_str:
             cur.append(ch)
-            if ch == "\\" and i + 1 < n:
+            if escapes and ch == "\\" and i + 1 < n:
                 # backslash-escaped char inside a literal (e.g. 'it\'s')
                 cur.append(sql[i + 1])
                 i += 2
@@ -57,8 +62,13 @@ def split_statements(sql: str) -> list[str]:
                 in_str = None
             i += 1
             continue
-        if ch in ("'", '"'):
+        if ch in ("'", '"', "`"):
             in_str = ch
+            # a raw-string prefix is an r/R that starts its own token
+            raw = (i > 0 and sql[i - 1] in "rR"
+                   and not (i > 1 and (sql[i - 2].isalnum()
+                                       or sql[i - 2] == "_")))
+            escapes = ch != "`" and not raw
             cur.append(ch)
         elif ch == "-" and sql[i:i + 2] == "--":
             j = sql.find("\n", i)

@@ -4,8 +4,8 @@ cmd/pipeline/pipeline.go:90-111).
 
 The probe is near-trivial for Spark (the session blocks until ready) but
 kept for interface parity and for Spark Connect remotes where readiness
-is real. The metrics endpoint serves the pipeline's stage/finalizer
-counters in Prometheus text format over stdlib HTTP — no client library
+is real. The metrics endpoint serves the pipeline's stage counters in
+Prometheus text format over stdlib HTTP — no client library
 dependency.
 """
 
@@ -40,8 +40,9 @@ class MetricsServer:
     """Prometheus-text metrics endpoint over the pipeline's counters.
 
     ``collect()`` callbacks return dicts of ``name{labels} -> value``;
-    stage metrics and finalizer stats register themselves here. Serves on
-    ``addr`` (default mirrors the reference's :9999)."""
+    ``plans.cli`` registers the stage metrics
+    (``stage_metrics_collector``), the only collector. Serves on ``port``
+    (default mirrors the reference's :9999)."""
 
     def __init__(self, port: int = 9999):
         self.port = port

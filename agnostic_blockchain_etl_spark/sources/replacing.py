@@ -28,9 +28,16 @@ def read_replacing(df: DataFrame, keys: list[str],
     """Latest row per ``keys`` (by ``version_col`` desc, else arbitrary-but-
     deterministic via all-column max) — the ReplacingMergeTree read path."""
     if version_col is None:
-        # no version column: any full replay writes identical bytes, so
-        # plain DISTINCT collapses replays exactly
-        return df.distinct()
+        # one row per key even when two differ (a block ingested again
+        # after a reorg): the greatest of the non-key columns as a struct
+        others = [c for c in df.columns if c not in keys]
+        if not others:
+            return df.distinct()
+        top = (df.groupBy(*keys)
+               .agg(F.max(F.struct(*others)).alias("__row")))
+        return top.select(*(F.col(c) if c in keys
+                            else F.col("__row").getField(c).alias(c)
+                            for c in df.columns))
     w = Window.partitionBy(*keys).orderBy(F.col(version_col).desc())
     return (df.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)

@@ -16,9 +16,13 @@ ingest buffer or tip plan. Two checks:
 - differential: each form and each registered name agree with the Python
   kernels in ``functions/hex.py``, which stay as the oracle: the same
   values, and a failed query where ``hex.py`` raises, whatever
-  ``spark.sql.ansi.enabled`` says."""
+  ``spark.sql.ansi.enabled`` says.
+
+The other registered names are the Python row kernels: one test checks
+that each plans as an Arrow row UDF."""
 
 import glob
+import json
 import os
 import random
 import re
@@ -87,22 +91,25 @@ def ansi(spark, request):
     spark.conf.set("spark.sql.ansi.enabled", old)
 
 
-def _python_evals(plan) -> list[list[str]]:
-    """UDF names of each Python evaluation node of a physical plan."""
+def _python_udfs(plan) -> list[list]:
+    """The PythonUDF expressions of each Python evaluation node of a
+    physical plan."""
     out = []
     if plan.nodeName() in ("ArrowEvalPython", "BatchEvalPython"):
         udfs = plan.udfs()
-        out.append(sorted(udfs.apply(i).name() for i in range(udfs.size())))
+        out.append([udfs.apply(i) for i in range(udfs.size())])
     if plan.nodeName() == "AdaptiveSparkPlan":
-        out += _python_evals(plan.inputPlan())
+        out += _python_udfs(plan.inputPlan())
     children = plan.children()
     for i in range(children.size()):
-        out += _python_evals(children.apply(i))
+        out += _python_udfs(children.apply(i))
     return out
 
 
 def _evals_of(df) -> list[list[str]]:
-    return _python_evals(df._jdf.queryExecution().executedPlan())
+    """UDF names of each Python evaluation node of ``df``'s plan."""
+    return [sorted(u.name() for u in node)
+            for node in _python_udfs(df._jdf.queryExecution().executedPlan())]
 
 
 def _code(path: str) -> str:
@@ -173,6 +180,50 @@ class TestPlanShape:
         assert plan.collect()[0].asDict() == {
             "b": b"*", "n": 42, "w": (42).to_bytes(32, "big"), "s": "0x2a",
             "q": "0x4"}
+
+
+class TestRowKernels:
+    def test_registered_as_arrow_row_udfs(self, spark):
+        """Every other registered name is a plain Python kernel under
+        Spark's Arrow row UDF; the RPC and decode ones nondeterministic,
+        so the optimizer cannot clone a call (``functions/registry.py``).
+        With NULL arguments each returns its own NULL rule's result."""
+        from pyspark.util import PythonEvalType
+        spark.createDataFrame([(None, None, None, None, None)],
+                              "s STRING, b BINARY, n BIGINT, "
+                              "a ARRAY<STRING>, t ARRAY<BINARY>") \
+            .createOrReplaceTempView("null_args")
+        df = spark.sql("""
+            SELECT keccak256(s) AS k,
+                   evm_decode_event(t, b, a) AS de,
+                   evm_decode_call(b, b, a) AS dc,
+                   ethereum_rpc(s, a, s) AS r,
+                   ethereum_rpc_call(s, s, s, n, s) AS rc,
+                   evm_word_add(b, b) AS wa, evm_word_sub(b, b) AS ws,
+                   evm_word_cmp(b, b) AS wc, evm_word_to_str(b) AS wt
+            FROM null_args""")
+        udfs = {u.name(): u for node in _python_udfs(
+            df._jdf.queryExecution().executedPlan()) for u in node}
+        assert set(udfs) == {
+            "keccak256", "evm_decode_event", "evm_decode_call",
+            "ethereum_rpc", "ethereum_rpc_call", "evm_word_add",
+            "evm_word_sub", "evm_word_cmp", "evm_word_to_str"}
+        assert {n: u.evalType() for n, u in udfs.items()} == \
+            dict.fromkeys(udfs, PythonEvalType.SQL_ARROW_BATCHED_UDF)
+        assert {n for n, u in udfs.items() if not u.udfDeterministic()} == {
+            "ethereum_rpc", "ethereum_rpc_call", "evm_decode_event",
+            "evm_decode_call"}
+
+        row = df.collect()[0].asDict()
+        envelopes = {k: json.loads(row.pop(k))
+                     for k in ("de", "dc", "r", "rc")}
+        assert row == dict.fromkeys(("k", "wa", "ws", "wc", "wt"))
+        assert envelopes == {
+            "de": {"value": None, "error": "no topics"},
+            "dc": {"value": None, "error": "input shorter than selector"},
+            "r": {"value": None, "error": "null method or endpoint"},
+            "rc": {"value": None,
+                   "error": "null to/func_sig/block_number/endpoint"}}
 
 
 class TestTemplateFunctions:

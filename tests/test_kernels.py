@@ -7,7 +7,7 @@ from hypothesis import given, strategies as st
 from pyspark.errors import PythonException
 
 from agnostic_blockchain_etl_spark.functions import (
-    abi, hex as hexmod, keccak, rpc)
+    abi, hex as hexmod, keccak, rpc, words)
 
 
 class TestKeccak:
@@ -30,6 +30,36 @@ class TestKeccak:
     def test_deterministic_and_32_bytes(self, data):
         d1, d2 = keccak.keccak256(data), keccak.keccak256(data)
         assert d1 == d2 and len(d1) == 32
+
+    def test_null_is_null(self):
+        assert keccak.keccak256(None) is None
+
+
+class TestWords:
+    """UInt256 word kernels, the functions SQL calls row by row."""
+
+    @staticmethod
+    def w(n: int) -> bytes:
+        return n.to_bytes(32, "big")
+
+    def test_add_wraps_at_2_256(self):
+        assert words.evm_word_add(self.w(2 ** 256 - 1), self.w(2)) == self.w(1)
+
+    def test_sub_below_zero_wraps(self):
+        assert words.evm_word_sub(self.w(0), self.w(1)) == self.w(2 ** 256 - 1)
+        assert words.evm_word_to_str(words.evm_word_sub(self.w(5), self.w(7))) \
+            == str(2 ** 256 - 2)
+
+    def test_cmp_is_three_way(self):
+        big = self.w(2 ** 255)
+        assert [words.evm_word_cmp(a, b) for a, b in (
+            (self.w(1), big), (big, big), (big, self.w(1)))] == [-1, 0, 1]
+
+    def test_null_arguments_give_null(self):
+        one = self.w(1)
+        for fn in (words.evm_word_add, words.evm_word_sub, words.evm_word_cmp):
+            assert fn(None, one) is None and fn(one, None) is None
+        assert words.evm_word_to_str(None) is None
 
 
 class TestHex:
@@ -197,6 +227,18 @@ class TestRpc:
         rpc.ethereum_rpc("eth_getBlockByNumber", ["0x1a", "false"],
                          "http://x", transport=t)
         assert seen[3] == ["0x1a", False]
+
+    def test_null_arguments_return_the_envelope(self):
+        """The kernels' own NULL rules, the ones SQL gets row by row."""
+        assert json.loads(rpc.ethereum_rpc(None, [], None)) == \
+            {"value": None, "error": "null method or endpoint"}
+        assert json.loads(rpc.ethereum_rpc_call(
+            "0x" + "cc" * 20, "function decimals()(uint8)", "", None,
+            "http://x")) == \
+            {"value": None, "error": "null to/func_sig/block_number/endpoint"}
+        t = rpc.MockTransport(lambda m, p: p)
+        assert json.loads(rpc.ethereum_rpc("m", None, "http://x", transport=t)) \
+            == {"value": [], "error": None}
 
     def test_fail_on_null(self):
         t = rpc.MockTransport(lambda m, p: None)

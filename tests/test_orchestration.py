@@ -173,6 +173,24 @@ class TestSplitStatements:
         assert split_statements("select /* a /* b */ ; 1") == [
             "select /* a /* b */ ; 1"]
 
+    def test_backquoted_identifier_hides_semicolon_and_quote(self):
+        assert split_statements("SELECT 1 AS `a;b`; SELECT 2") == [
+            "SELECT 1 AS `a;b`", "SELECT 2"]
+        assert split_statements("SELECT 1 AS `it's`; SELECT 2") == [
+            "SELECT 1 AS `it's`", "SELECT 2"]
+        # a doubled backtick is a backtick inside the identifier
+        assert split_statements("SELECT 1 AS `a``;b`; SELECT 2") == [
+            "SELECT 1 AS `a``;b`", "SELECT 2"]
+
+    def test_raw_string_has_no_backslash_escape(self):
+        assert split_statements("SELECT r'a\\' AS x; SELECT 2") == [
+            "SELECT r'a\\' AS x", "SELECT 2"]
+        assert split_statements('SELECT R"a\\" AS x; SELECT 2') == [
+            'SELECT R"a\\" AS x', "SELECT 2"]
+        # an identifier ending in r is no raw prefix: \' escapes here
+        assert split_statements("SELECT bar'a\\';x'; SELECT 2") == [
+            "SELECT bar'a\\';x'", "SELECT 2"]
+
 
 def _pipeline_conf(max_batch=10, tips=1, workers=4):
     return PipelineConfig.from_dict({
