@@ -19,8 +19,8 @@ from __future__ import annotations
 _MASK256 = (1 << 256) - 1
 
 
-def word_to_int(w: bytes | None) -> int | None:
-    return None if w is None else int.from_bytes(w, "big")
+def word_to_int(w: bytes) -> int:
+    return int.from_bytes(w, "big")
 
 
 def int_to_word(n: int) -> bytes:
